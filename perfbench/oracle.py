@@ -52,16 +52,18 @@ class Oracle:
             p = os.path.join(data_dir, f"{t}.parquet").replace("'", "''")
             self.con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    def mismatch(self, name: str, df) -> str | None:
-        """None when ``df`` (a Spark DataFrame) equals the oracle's
-        result for ``name``, else a one-line reason."""
+    def mismatch(self, name: str, result: tuple[list[str], list]) -> str | None:
+        """None when ``result`` (a Spark result's column names and
+        collected rows) equals the oracle's result for ``name``, else a
+        one-line reason."""
         rel = self.con.sql(self.sql[name])
         want_cols = [c.lower() for c in rel.columns]
         want = _multiset(rel.fetchall(), want_cols)
-        got_cols = [c.lower() for c in df.columns]
+        columns, rows = result
+        got_cols = [c.lower() for c in columns]
         if sorted(got_cols) != sorted(want_cols):
             return f"columns {sorted(got_cols)} != {sorted(want_cols)}"
-        got = _multiset(df.collect(), got_cols)
+        got = _multiset(rows, got_cols)
         if len(got) != len(want):
             return f"{len(got)} rows != oracle {len(want)}"
         if got != want:

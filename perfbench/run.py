@@ -12,8 +12,9 @@ Python, JVM, Python workers) from ``/proc``.
 ``--trace 0`` prints the end-to-end metrics. ``--trace 1`` prints the
 per-layer metrics: it runs the workload with Spark's event log on, then
 an untraced reference for the tracing overhead (for ``ingest``, the
-catch-up drain alone, at nproc cores and then at one core); its spans go to
-``.perfbench/trace/``.
+catch-up drain alone, at nproc cores and then at one core, in a second
+worker; for ``batch_ops``, one pass in a second session of the traced
+worker); its spans go to ``.perfbench/trace/``.
 
 ``--write-spec`` rewrites ``BENCHMARK.json`` from ``metrics.py``.
 """
@@ -175,13 +176,14 @@ def main() -> int:
     os.makedirs(run_dir)
     # --trace 1: the traced run gives every per-layer figure and an
     # untraced reference the tracing overhead; for ingest the reference
-    # is the catch-up drain alone, also run at one core for the scaling
+    # is the catch-up drain alone, also run at one core for the scaling;
+    # for batch_ops it is a second session inside the traced worker
     if not args.trace:
         roles = ["plain"]
     elif args.workload == "ingest":
         roles = ["traced", "drain"]
     else:
-        roles = ["traced", "plain"]
+        roles = ["traced"]
     try:
         res = {r: run_worker(args.workload, args.seed, args.seconds, r, run_dir)
                for r in roles}
@@ -201,8 +203,9 @@ def main() -> int:
     if args.trace:
         layers = {name: 0.0 for name in per_layer()}
         layers.update(main_run["layers"])
-        reference = res[roles[1]]
-        layers["trace.overhead_ratio"] = main_run["work_s"] / max(reference["work_s"], 1e-9)
+        reference = res[roles[-1]]
+        ref_work_s = reference.get("reference_work_s", reference["work_s"])
+        layers["trace.overhead_ratio"] = main_run["work_s"] / max(ref_work_s, 1e-9)
         layers["failed_share"] = failed / max(attempted, 1)
         if "throughput_1core" in reference:
             layers["ingest.scaling_x"] = (reference["e2e"]["throughput_per_s"]

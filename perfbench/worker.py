@@ -7,7 +7,10 @@ scratch location into the run's work directory. Roles:
 * ``plain``  tracing off: the end-to-end metrics;
 * ``traced`` the same run with Spark's event log on: the listener,
   status-tracker and span figures, and the ``trace.*`` figures the event
-  log gives for the timed window;
+  log gives for the timed window. For ``batch_ops`` it goes on with the
+  traced-only operators, then, in a second session of the same JVM with
+  the event log off, one pass without a warm-up: the reference for the
+  tracing overhead;
 * ``drain``  the ``ingest`` catch-up drain alone, at nproc cores and then
   at one core: the untraced reference for the tracing overhead and the
   scaling ratio.
@@ -19,6 +22,7 @@ Usage: python3 perfbench/worker.py --workload W --seed N --seconds S
 from __future__ import annotations
 
 import argparse
+import concurrent.futures
 import datetime
 import json
 import os
@@ -34,7 +38,13 @@ sys.path.insert(0, ROOT)
 sys.path.insert(0, HERE)
 
 import fixtures  # noqa: E402
-from metrics import CURATION_OPS, GATE_OPS, QUERY_SURFACE  # noqa: E402
+from metrics import (  # noqa: E402
+    CURATION_OPS,
+    GATE_OPS,
+    QUERY_SURFACE,
+    TRACED_GATES,
+    TRACED_OPS,
+)
 from probes import (  # noqa: E402
     READER_GROUP,
     Spans,
@@ -48,8 +58,11 @@ from probes import (  # noqa: E402
     quantile,
 )
 
-BACKLOG_FRAMES = 60_000
-BACKLOG_FILES = 6
+# ~76k frames an epoch: per-frame work (decode, dedup state, sorted
+# write) is about 70% of a catch-up epoch; the fixed per-epoch cost is
+# ~1 s, the whole of a live epoch
+BACKLOG_FRAMES = 225_000
+BACKLOG_FILES = 3
 WARM_FRAMES = 10_000
 LIVE_FILE_EVERY_S = 0.1
 LIVE_FRAMES_PER_FILE = 250
@@ -58,6 +71,12 @@ DUPLICATE_EVERY = 50
 CORRUPT_EVERY = 97
 DRAIN_TIMEOUT_S = 120
 LIVE_TAIL_S = 15.0
+# scratch-dir prefix of each gate's run (verdicts and index stores)
+GATE_RUN_PREFIX = {
+    "stream_novelty_docs": "stream_novelty_run_",
+    "stream_dedup_docs": "stream_dedup_docs_run_",
+    "stream_semdedup_lsh": "stream_semdedup_lsh_run_",
+}
 
 
 class Run:
@@ -78,7 +97,7 @@ class Run:
         self.window = (0.0, 0.0)
         self.setup_s = 0.0
         self.work_s = 0.0
-        self.backlog: tuple[str, list[dict]] | None = None
+        self.backlog: tuple[str, int] | None = None
         self._oracle = None
         self._calls = 0
         self._lock = threading.Lock()
@@ -102,9 +121,12 @@ class Run:
             self.errors.append(what)
 
     def call(self, name: str, fn, parent: str | None = None,
-             group_prefix: str = "perfbench-call-"):
-        """Build a registry DataFrame, then run it to a noop sink.
-        Returns (df, build_s, exec_s, jobs, tasks)."""
+             group_prefix: str = "perfbench-call-", collect: bool = True):
+        """Build a registry DataFrame, then collect its result to the
+        driver (the results are small; the rows are what the output
+        check compares), or with ``collect=False`` run it to a noop sink
+        and return no rows. Returns ((columns, rows), build_s, exec_s,
+        jobs, tasks)."""
         with self._lock:
             group = f"{group_prefix}{self._calls}"
             self._calls += 1
@@ -113,14 +135,18 @@ class Run:
             t0 = time.time()
             df = fn(self.spark, self.data)
             t1 = time.time()
-            df.write.format("noop").mode("overwrite").save()
+            if collect:
+                rows = df.collect()
+            else:
+                rows = None
+                df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
         finally:
             self.sc.setJobGroup(None, None)
         jobs, tasks = jobs_tasks(self.sc, group)
         self.spans.add(f"{name}.build", t0, t1, parent, layer="driver")
         self.spans.add(f"{name}.exec", t1, t2, parent, layer="exec")
-        return df, t1 - t0, t2 - t1, jobs, tasks
+        return (df.columns, rows), t1 - t0, t2 - t1, jobs, tasks
 
     def canary(self) -> float:
         from pyspark.sql import functions as F
@@ -223,7 +249,7 @@ def sink_layers(run: Run, out_dir: str, epochs: int, rows: int) -> None:
     })
 
 
-def decoder_probe(run: Run, frames_dir: str, truth: list[dict]) -> None:
+def decoder_probe(run: Run, frames_dir: str, want_corrupt: int) -> None:
     """``corrupt_frame_count`` (a full ``decode_frames`` pass) over a frame
     backlog: decoded frames per second, and the corrupt-frame count
     against the generator's truth."""
@@ -233,8 +259,8 @@ def decoder_probe(run: Run, frames_dir: str, truth: list[dict]) -> None:
     counts = corrupt_frame_count(run.spark.read.parquet(frames_dir)).first()
     dt = time.time() - t0
     bad = counts["n_corrupt"]
-    if bad != corrupt_count(truth):
-        run.fail(f"decoder counted {bad} corrupt frames, truth {corrupt_count(truth)}")
+    if bad != want_corrupt:
+        run.fail(f"decoder counted {bad} corrupt frames, truth {want_corrupt}")
     run.layers["decoder.rows_per_s"] = counts["n_frames"] / dt
     run.layers["decoder.corrupt_frames"] = float(bad)
 
@@ -294,9 +320,11 @@ def ingest(run: Run, measure_start) -> None:
         per = -(-len(live_frames) // n_files)
         tables = [pa.table({"frame": pa.array(live_frames[k * per:(k + 1) * per], pa.binary())})
                   for k in range(n_files)]
-    truth = truth[:len(truth) * n_backlog // BACKLOG_FILES]
-    run.backlog = (backlog, truth)
-    want = truth_digest(truth)
+        warm_want = truth_digest(truth[:WARM_FRAMES])
+        truth = truth[:len(truth) * n_backlog // BACKLOG_FILES]
+        run.backlog = (backlog, corrupt_count(truth))
+        want = truth_digest(truth)
+        del frames, truth
 
     def q_round(parent: str, lat: list, builds: list, execs: list, jt: list,
                 stop: threading.Event | None = None) -> None:
@@ -305,7 +333,10 @@ def ingest(run: Run, measure_start) -> None:
                 return
             run.attempt()
             try:
-                _, b, e, j, t = run.call(name, queries[name], parent, READER_GROUP)
+                # a noop sink: collecting rows in the driver would take
+                # the GIL from the stream's foreachBatch body beside it
+                _, b, e, j, t = run.call(name, queries[name], parent, READER_GROUP,
+                                         collect=False)
                 lat.append((name, b + e))
                 builds.append(b)
                 execs.append(e)
@@ -320,7 +351,7 @@ def ingest(run: Run, measure_start) -> None:
             if live_role:
                 cold.start()
             out, _, _, _ = drain(run, warm, "warm")
-            if sink_digest(run.spark, out) != truth_digest(truth[:WARM_FRAMES]):
+            if sink_digest(run.spark, out) != warm_want:
                 run.fail("warm-up sink differs from the generator truth")
             if live_role:
                 cold.join()
@@ -340,11 +371,10 @@ def ingest(run: Run, measure_start) -> None:
         run.fail(f"backfill: {missing} backlog files not committed", missing)
     elif got != want:
         run.fail(f"backfill: sink {got} != truth {want}", n_backlog)
-    # frames per second of epoch, median over the drain's data epochs:
-    # robust to one slow epoch and to query start-up
+    # frames per second of epoch over the drain's data epochs: query
+    # start-up and the final empty trigger are left out
     epochs = [e for e in run.probe.wait_for(rid, n_commits(ckpt)) if e["rows"]]
     run.epoch_spans(epochs, "backfill")
-    rates = [e["rows"] / e["trigger_s"] for e in epochs if e["trigger_s"]]
     run.layers.update({
         "backfill.epochs": float(len(epochs)),
         "backfill.rows_per_epoch_p50": median([e["rows"] for e in epochs]),
@@ -354,7 +384,8 @@ def ingest(run: Run, measure_start) -> None:
         "backfill.ticks_per_drain_s": want[0] / secs,
         "backfill.read_s": read_s,
     })
-    run.e2e["throughput_per_s"] = median(rates)
+    run.e2e["throughput_per_s"] = (sum(e["rows"] for e in epochs)
+                                   / max(sum(e["trigger_s"] for e in epochs), 1e-9))
     run.work_s = secs
     run.window = (t_lo, time.time())
     if not live_role:
@@ -430,13 +461,21 @@ def ingest(run: Run, measure_start) -> None:
         by_query.setdefault(name, []).append(secs)
     if len(by_query) < len(QUERY_SURFACE):
         run.fail("the feed ended before the reader ran every one of Q1-Q8")
+    # a feed that ran late or rows the watermark dropped make the run
+    # invalid: the first is the generator's fault, the second the stream's
+    if max(late, default=0.0) >= LIVE_FILE_EVERY_S / 2:
+        run.fail(f"the feed generator ran {max(late):.3f} s late")
     batches = n_commits(ckpt)
     run.stream_layers({str(q.runId): batches})
+    if run.layers["stream.late_rows"]:
+        run.fail(f"{run.layers['stream.late_rows']:.0f} live rows dropped by the watermark")
     run.e2e.update({
         "latency_p50_s": median(fresh),
         "latency_p90_s": quantile(fresh, 0.9),
-        # every query weighs the same, whatever mix the window completed
-        "read_s": statistics.fmean(statistics.fmean(v) for v in by_query.values())
+        # every query weighs the same, whatever mix the window completed;
+        # a query's median is robust to the one call that met an epoch's
+        # busiest part
+        "read_s": statistics.fmean(median(v) for v in by_query.values())
         if by_query else 0.0,
     })
     n_q = max(len(jt), 1)
@@ -459,106 +498,158 @@ def ingest(run: Run, measure_start) -> None:
     sink_layers(run, out, batches, live_want[0])
     oracle = run.oracle()
     for name in QUERY_SURFACE:
-        why = oracle.mismatch(name, queries[name](run.spark, run.data))
+        df = queries[name](run.spark, run.data)
+        why = oracle.mismatch(name, (df.columns, df.collect()))
         if why:
             run.fail(f"{name}: {why}")
 
 
 # --- curation operators and stream gates ------------------------------------
 
+def op_layers(run: Run, op: str, calls: list[tuple]) -> list[str]:
+    """Per-operator figures from its calls (build_s, exec_s, jobs, tasks,
+    new stream run ids); for a gate also its epoch figures. Returns the
+    gate's stream run ids."""
+    from angelone_clickhouse_spark.streaming.docdedup import N_STREAM_EPOCHS
+
+    run.layers.update({
+        f"ops.{op}.build_s": median([c[0] for c in calls]),
+        f"ops.{op}.exec_s": median([c[1] for c in calls]),
+        f"ops.{op}.jobs": median([c[2] for c in calls]),
+        f"ops.{op}.tasks": median([c[3] for c in calls]),
+    })
+    rids = [rid for c in calls for rid in c[4]]
+    if not rids:
+        return []
+    epochs = [e for rid in rids for e in run.probe.wait_for(rid, N_STREAM_EPOCHS)]
+    run.layers[f"ops.{op}.epoch_s_p50"] = median([e["trigger_s"] for e in epochs])
+    run.layers[f"ops.{op}.machinery_s_p50"] = median(
+        [e["trigger_s"] - e["addbatch_s"] for e in epochs])
+    return rids
+
+
+def warm_call(run: Run, op: str, fn) -> None:
+    """One untimed call; a failure counts as a failed operation."""
+    try:
+        run.call(op, fn, "warmup")
+    except Exception as exc:
+        run.attempt()
+        run.fail(f"{op} (warm-up): {exc!r}")
+
+
+def timed_call(run: Run, op: str, fn, parent: str, results: dict) -> tuple | None:
+    """One call of ``op`` as an operation: its result goes to
+    ``results`` for the output check. Returns (build_s, exec_s, jobs,
+    tasks, new stream run ids), or None if it raised."""
+    run.attempt()
+    before = set(run.probe.batches)
+    try:
+        res, b, e, j, t = run.call(op, fn, parent)
+    except Exception as exc:
+        run.fail(f"{op}: {exc!r}")
+        return None
+    results[op] = res
+    return b, e, j, t, sorted(set(run.probe.batches) - before)
+
+
 def batch_ops(run: Run, measure_start) -> None:
+    """Closed loop, one client: every operator and the gate once per
+    pass, in a fixed order, until ``--seconds`` have passed, after one
+    untimed warm-up pass (which also builds the gate's replay dir).
+
+    The traced run then calls the ANN recall and the docdedup and
+    embdedup gates once each, outside the timed window, after one
+    untimed call of each (their first calls take up to twice as long)."""
     import __spark_entry__
     from angelone_clickhouse_spark.streaming.docdedup import N_STREAM_EPOCHS
 
     queries = __spark_entry__.queries()
     ops = CURATION_OPS + GATE_OPS
+    # the reference session follows a traced one in the same JVM
+    warm_ops = () if run.args.role == "reference" else ops
     with run.spans.span("setup.warmup"):
-        run.call("dedup_simhash", queries["dedup_simhash"], "warmup")
+        for op in warm_ops:
+            warm_call(run, op, queries[op])
 
     measure_start()
     t_lo = time.time()
-    lat, execs, passes, results = [], [], [], {}
-    per_op: dict[str, list] = {op: [] for op in ops}
+    passes, results = [], {}
+    calls: dict[str, list] = {op: [] for op in ops}
     while True:
         t_pass = time.time()
         for op in ops:
-            run.attempt()
-            before = set(run.probe.batches)
-            try:
-                df, b, e, j, t = run.call(op, queries[op], "pass")
-            except Exception as exc:
-                run.fail(f"{op}: {exc!r}")
-                continue
-            lat.append(b + e)
-            execs.append(e)
-            results[op] = df
-            per_op[op].append((b, e, j, t, sorted(set(run.probe.batches) - before)))
+            c = timed_call(run, op, queries[op], "pass", results)
+            if c:
+                calls[op].append(c)
         passes.append(time.time() - t_pass)
         if time.time() >= t_lo + run.args.seconds:
             break
     run.window = (t_lo, time.time())
+    run.work_s = median(passes)
+    lat = [c[0] + c[1] for cs in calls.values() for c in cs]
     run.e2e.update({
         "throughput_per_s": len(ops) / median(passes),
         "latency_p50_s": median(lat),
         "latency_p90_s": quantile(lat, 0.9),
-        "read_s": statistics.fmean(execs) if execs else 0.0,
+        "read_s": statistics.fmean(c[1] for cs in calls.values() for c in cs) if lat else 0.0,
     })
-    run.work_s = median(passes)
-    gate_runs: dict[str, int] = {}
-    for op, rows in per_op.items():
-        if not rows:
-            continue
-        run.layers.update({
-            f"ops.{op}.build_s": median([r[0] for r in rows]),
-            f"ops.{op}.exec_s": median([r[1] for r in rows]),
-            f"ops.{op}.jobs": median([r[2] for r in rows]),
-            f"ops.{op}.tasks": median([r[3] for r in rows]),
-        })
-        if op in GATE_OPS:
-            rids = [rid for r in rows for rid in r[4]]
-            gate_runs.update((rid, N_STREAM_EPOCHS) for rid in rids)
-            ep = [e for rid in rids for e in run.probe.wait_for(rid, N_STREAM_EPOCHS)]
-            run.layers[f"ops.{op}.epoch_s_p50"] = median([e["trigger_s"] for e in ep])
-            run.layers[f"ops.{op}.machinery_s_p50"] = median(
-                [e["trigger_s"] - e["addbatch_s"] for e in ep])
+    gate_runs = {}
+    for op, cs in calls.items():
+        if cs:
+            gate_runs.update((rid, N_STREAM_EPOCHS) for rid in op_layers(run, op, cs))
     run.stream_layers(gate_runs)
+
+    if run.args.role == "traced":
+        extra = TRACED_OPS + TRACED_GATES
+        with run.spans.span("traced_ops.warmup"):
+            # one untimed call each, all at once on their own threads
+            with concurrent.futures.ThreadPoolExecutor(len(extra)) as pool:
+                list(pool.map(lambda op: warm_call(run, op, queries[op]), extra))
+        with run.spans.span("traced_ops"):
+            for op in extra:
+                c = timed_call(run, op, queries[op], "traced_ops", results)
+                if c:
+                    op_layers(run, op, [c])
+
     oracle = run.oracle()
-    for op, df in results.items():
-        why = oracle.mismatch(op, df)
+    for op, res in results.items():
+        why = oracle.mismatch(op, res)
         if why:
             run.fail(f"{op}: {why}")
     gate_sinks(run)
 
 
 def gate_sinks(run: Run) -> None:
-    """Sink figures over the last gate run's committed stores (verdicts
-    and index), which live in the package's own scratch dirs under
-    TMPDIR."""
+    """Sink figures over the last run of each gate that ran (verdicts
+    and index stores), which live in the package's own scratch dirs
+    under TMPDIR."""
     import glob
 
     from angelone_clickhouse_spark.streaming.docdedup import N_STREAM_EPOCHS
 
-    runs = glob.glob(os.path.join(os.environ["TMPDIR"], "stream_*_run_*"))
-    if not runs:
-        return
-    last = max(runs, key=os.path.getmtime)
-    files = nbytes = 0
-    for d in os.listdir(last):
-        if d.endswith(".stage") or d == "ckpt":
+    files = nbytes = rows = leftover = gates = 0
+    for op in GATE_OPS + TRACED_GATES:
+        runs = glob.glob(os.path.join(os.environ["TMPDIR"], GATE_RUN_PREFIX[op] + "*"))
+        if not runs:
             continue
-        for sub, _, names in os.walk(os.path.join(last, d)):
-            for n in names:
-                if n.endswith(".parquet"):
-                    files += 1
-                    nbytes += os.path.getsize(os.path.join(sub, n))
-    rows = run.spark.read.parquet(os.path.join(last, "verdicts")).count()
-    leftover = sum(len(ns) for d in glob.glob(os.path.join(last, "*.stage"))
-                   for _, _, ns in os.walk(d))
+        last = max(runs, key=os.path.getmtime)
+        gates += 1
+        for d in os.listdir(last):
+            if d.endswith(".stage") or d == "ckpt":
+                continue
+            for sub, _, names in os.walk(os.path.join(last, d)):
+                for n in names:
+                    if n.endswith(".parquet"):
+                        files += 1
+                        nbytes += os.path.getsize(os.path.join(sub, n))
+        rows += run.spark.read.parquet(os.path.join(last, "verdicts")).count()
+        leftover += sum(len(ns) for d in glob.glob(os.path.join(last, "*.stage"))
+                        for _, _, ns in os.walk(d))
     if leftover:
-        run.fail(f"{leftover} files left in the gate's staging dirs")
+        run.fail(f"{leftover} files left in the gates' staging dirs")
     run.layers.update({
         "sink.rows": float(rows),
-        "sink.files_per_epoch": files / N_STREAM_EPOCHS,
+        "sink.files_per_epoch": files / max(gates * N_STREAM_EPOCHS, 1),
         "sink.bytes_per_row": nbytes / max(rows, 1),
         "sink.stage_leftover_files": float(leftover),
     })
@@ -572,7 +663,9 @@ def measure(args, cores: int | None = None) -> dict:
     outputs. ``cores`` overrides the session's ``local[N]`` master."""
     from angelone_clickhouse_spark.session import get_spark
 
-    work = os.path.join(args.work, f"cores-{cores}") if cores else args.work
+    work = args.work
+    if cores or args.role == "reference":
+        work = os.path.join(args.work, f"{args.role}-{cores or 'n'}")
     spans = Spans(f"{args.workload}-{args.seed}-{args.role}")
     t0 = time.time()
     with spans.span("session.start", layer="session"):
@@ -652,6 +745,19 @@ def main() -> int:
             result[k] += single[k]
     else:
         result = measure(args)
+    if args.role == "traced" and args.workload == "batch_ops":
+        # the untraced reference: a second session of the same JVM with
+        # the event log off (new sessions read it from the JVM's system
+        # properties), whose warm JIT and code caches stand in for a
+        # warm-up pass the time budget cannot hold
+        from pyspark import SparkContext
+
+        SparkContext._jvm.java.lang.System.setProperty("spark.eventLog.enabled", "false")
+        ref = measure(argparse.Namespace(**{**vars(args), "role": "reference",
+                                            "eventlog": ""}))
+        result["reference_work_s"] = ref["work_s"]
+        for k in ("attempted", "failed", "errors", "spans"):
+            result[k] += ref[k]
     with open(args.out, "w") as fh:
         json.dump(result, fh)
     return 0
