@@ -8,29 +8,24 @@ yield NULL fields plus ``is_corrupt = true`` so the error counter the
 reference exposes (market_data_errors_total, main.go:363) is a simple
 filter-count, and zero is never conflated with "missing".
 
-Two implementations, tested equal:
-
-- :func:`decode_frames` — Arrow-batched pandas UDF. One
-  ``np.frombuffer`` per field over the whole batch; no per-row Python.
-  This is the 100 TB path: decode is embarrassingly parallel, so a
-  vectorized UDF scales linearly with executors and the Arrow transfer
-  is the only overhead.
-- :func:`le_long` / :func:`decode_frames_native` — pure column
-  expressions (hex -> byte-swap -> base-16 conv), fully whole-stage
-  codegen'd, no Python at all. Covers the integer fields; IEEE-754
-  doubles (total_buy/sell_quantity) have no bits-to-double builtin, so
-  the native path reinterprets them via the same long decode in a
-  pandas fallback only when those columns are selected. Kept as the
-  reference plan for JVM-only deployments.
+:func:`decode_frames` is one ``mapInArrow`` pass over the frame column.
+Per Arrow batch, the binary array's offsets and data buffers give each
+frame's start; each numeric field is then one numpy gather of
+``<i8``/``<f8`` values at its fixed offset from every start, and the
+token is decoded in Python once per distinct 25-byte slice. No Python
+runs per frame. Decode is narrow and embarrassingly parallel: it scales
+with the partitions of its input.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -63,6 +58,7 @@ WIRE_SCHEMA = StructType(
         StructField("is_corrupt", BooleanType()),
     ]
 )
+_ARROW_SCHEMA = to_arrow_schema(WIRE_SCHEMA)
 
 # (name, offset, numpy dtype) for the fixed-layout fields.
 _HEADER_NUM = [
@@ -81,132 +77,95 @@ _TAIL_NUM = [
     ("low_price_of_the_day", 107, "<i8"),
     ("closed_price", 115, "<i8"),
 ]
+_TOKEN_OFF, _TOKEN_LEN = 2, 25
 
 
-@pandas_udf(WIRE_SCHEMA)
-def _decode_udf(frames: pd.Series) -> pd.DataFrame:
+def _frame_bytes(frames: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(data, starts, lens) of a binary array: its frames' bytes
+    followed by FULL_LEN zero bytes, so a fixed-width read at any
+    frame's start stays in bounds; each frame's start in ``data``; and
+    each frame's length (0 for NULL frames)."""
     n = len(frames)
-    out: dict[str, object] = {}
-    lengths = frames.map(lambda b: 0 if b is None else len(b)).to_numpy()
-    has_header = lengths >= HEADER_LEN
-    has_tail = lengths >= FULL_LEN
+    off_type = np.int64 if pa.types.is_large_binary(frames.type) else np.int32
+    _, off_buf, data_buf = frames.buffers()
+    offsets = np.frombuffer(off_buf, dtype=off_type, count=frames.offset + n + 1)
+    offsets = offsets[frames.offset:].astype(np.int64)
+    lens = np.diff(offsets)
+    if frames.null_count:
+        lens[frames.is_null().to_numpy(zero_copy_only=False)] = 0
+    base, end = offsets[0], offsets[-1]
+    data = np.zeros(end - base + FULL_LEN, dtype=np.uint8)
+    if data_buf is not None:  # absent when every frame is empty or NULL
+        data[: end - base] = np.frombuffer(data_buf, dtype=np.uint8, count=end)[base:]
+    return data, offsets[:-1] - base, lens
 
-    modes = np.zeros(n, dtype=np.int64)
-    exch = np.zeros(n, dtype=np.int64)
-    tokens = np.empty(n, dtype=object)
-    num_cols = {name: np.zeros(n, dtype=dt) for name, _, dt in _HEADER_NUM + _TAIL_NUM}
 
-    for i, buf in enumerate(frames):
-        if buf is None or len(buf) < HEADER_LEN:
-            continue
-        modes[i] = buf[0]
-        exch[i] = buf[1]
-        tokens[i] = buf[2:27].split(b"\x00", 1)[0].decode("ascii", "replace")
-        for name, off, dt in _HEADER_NUM:
-            num_cols[name][i] = np.frombuffer(buf, dtype=dt, count=1, offset=off)[0]
-        if len(buf) >= FULL_LEN:
-            for name, off, dt in _TAIL_NUM:
-                num_cols[name][i] = np.frombuffer(buf, dtype=dt, count=1, offset=off)[0]
+def _read(data: np.ndarray, starts: np.ndarray, off: int, dtype: str) -> np.ndarray:
+    """The ``dtype`` value at byte ``off`` of every frame: one gather
+    through an unaligned view that starts a value at every byte."""
+    dt = np.dtype(dtype)
+    view = np.ndarray(
+        (len(data) - dt.itemsize + 1,), dtype=dt, buffer=data, strides=(1,)
+    )
+    return view[starts + off]
 
-    def masked(arr, mask):
-        # int64 columns must use the nullable Int64 extension dtype:
-        # plain .where() would coerce to float64 to hold NaN, silently
-        # corrupting values above 2^53 for the OTHER rows in the batch
-        s = pd.Series(arr)
-        if s.dtype.kind in "iu":
-            s = s.astype("Int64")
-            return s.where(pd.Series(mask), other=pd.NA)
-        return s.where(pd.Series(mask))
 
-    out["subscription_mode"] = masked(modes, has_header)
-    out["exchange_type"] = masked(exch, has_header)
-    out["token"] = pd.Series(tokens).where(pd.Series(has_header))
-    for name, _, _ in _HEADER_NUM:
-        out[name] = masked(num_cols[name], has_header)
+def _tokens(data: np.ndarray, starts: np.ndarray, valid: np.ndarray) -> pa.Array:
+    """bytes 2-27 cut at the first NUL, ``ascii``/``replace`` decoded
+    once per distinct slice."""
+    raw = _read(data, starts, _TOKEN_OFF, f"S{_TOKEN_LEN}")
+    slices = pa.FixedSizeBinaryArray.from_buffers(
+        pa.binary(_TOKEN_LEN), len(raw), [None, pa.py_buffer(raw)]
+    ).dictionary_encode()
+    text = pa.array(
+        [u.split(b"\x00", 1)[0].decode("ascii", "replace")
+         for u in slices.dictionary.to_pylist()],
+        type=pa.string(),
+    )
+    return text.take(pa.array(slices.indices.to_numpy(), mask=~valid))
+
+
+def _decode_batch(frames: pa.Array) -> pa.RecordBatch:
+    data, starts, lens = _frame_bytes(frames)
+    has_header = lens >= HEADER_LEN
+    no_header = ~has_header
+    modes = data[starts].astype(np.int32)
     # Mode 4 (DEPTH, models/token.go:18) frames parse as mode>=2: the
     # reference parser never decodes a depth payload (parser/binary.go
     # :63-73 stops at the mode>=2 tail), so neither do we.
     # Tail fields are defined only for mode >= 2 frames that carry them;
     # a mode>=2 frame shorter than FULL_LEN is corrupt (reference would
     # silently zero-fill, parser/binary.go:52-75 — we null instead).
-    tail_ok = has_tail & (modes >= 2)
-    for name, _, _ in _TAIL_NUM:
-        out[name] = masked(num_cols[name], tail_ok)
+    # Bytes read past a frame's end belong to the next frame; these
+    # masks null every such read.
+    tail_mode = has_header & (modes >= 2)
+    has_tail = lens >= FULL_LEN
+    no_tail = ~(tail_mode & has_tail)
+    cols = {
+        "subscription_mode": pa.array(modes, mask=no_header),
+        "exchange_type": pa.array(data[starts + 1].astype(np.int32), mask=no_header),
+        "token": _tokens(data, starts, has_header),
+    }
+    for name, off, dt in _HEADER_NUM:
+        cols[name] = pa.array(_read(data, starts, off, dt), mask=no_header)
+    for name, off, dt in _TAIL_NUM:
+        cols[name] = pa.array(_read(data, starts, off, dt), mask=no_tail)
     # corrupt = too short for its declared mode (or no header at all)
-    corrupt = (~has_header) | ((modes >= 2) & ~has_tail)
-    out["is_corrupt"] = pd.Series(corrupt)
-    return pd.DataFrame(out)
+    cols["is_corrupt"] = pa.array(no_header | (tail_mode & ~has_tail))
+    return pa.RecordBatch.from_arrays(
+        [cols[f.name] for f in _ARROW_SCHEMA], schema=_ARROW_SCHEMA
+    )
+
+
+def _decode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        yield _decode_batch(batch.column(0))
 
 
 def decode_frames(df: DataFrame, frame_col: str = "frame") -> DataFrame:
     """Decode a binary frame column into the full wire schema (one
     output column per wire field + is_corrupt)."""
-    decoded = df.withColumn("_w", _decode_udf(F.col(frame_col)))
-    return decoded.select(
-        *[F.col(f"_w.{f.name}").alias(f.name) for f in WIRE_SCHEMA.fields]
-    )
-
-
-# ---------------------------------------------------------------------------
-# Pure-column (whole-stage-codegen) integer decode — no Python anywhere.
-# ---------------------------------------------------------------------------
-def le_long(bin_col: Column, offset: int) -> Column:
-    """Little-endian int64 at 1-based byte ``offset`` of a binary column,
-    as pure SQL expressions: slice 8 bytes -> hex -> reverse byte pairs
-    -> base-16 to decimal -> two's-complement fix -> long."""
-    hx = F.hex(F.substring(bin_col, offset, 8))  # 16 hex chars, byte order as stored
-    swapped = F.concat(
-        *[F.substring(hx, i, 2) for i in (15, 13, 11, 9, 7, 5, 3, 1)]
-    )
-    unsigned = F.conv(swapped, 16, 10).cast("decimal(20,0)")
-    signed = F.when(
-        unsigned > F.lit(9223372036854775807).cast("decimal(20,0)"),
-        (unsigned - F.lit("18446744073709551616").cast("decimal(21,0)")),
-    ).otherwise(unsigned)
-    return signed.cast("long")
-
-
-def decode_frames_native(df: DataFrame, frame_col: str = "frame") -> DataFrame:
-    """JVM-only decode of the integer/string wire fields (header + int
-    tail). Stays inside whole-stage codegen; reference plan for
-    deployments that must avoid Python workers entirely."""
-    b = F.col(frame_col)
-    ok = F.length(b) >= HEADER_LEN
-    mode = F.when(ok, F.conv(F.hex(F.substring(b, 1, 1)), 16, 10).cast("int"))
-    full = F.length(b) >= FULL_LEN
-    tail_ok = full & (mode >= 2)
-
-    def hdr(c: Column) -> Column:
-        return F.when(ok, c)
-
-    def tail(c: Column) -> Column:
-        return F.when(tail_ok, c)
-
-    return df.select(
-        mode.alias("subscription_mode"),
-        hdr(F.conv(F.hex(F.substring(b, 2, 1)), 16, 10).cast("int")).alias(
-            "exchange_type"
-        ),
-        # first-NUL truncation, identical to the pandas path's
-        # split(b"\x00")[0] — a regex '.' would stop at a newline in
-        # garbage padding and leave residue after the first NUL
-        hdr(
-            F.substring_index(
-                F.decode(F.substring(b, 3, 25), "UTF-8"), "\x00", 1
-            )
-        ).alias("token"),
-        hdr(le_long(b, 28)).alias("sequence_number"),
-        hdr(le_long(b, 36)).alias("exchange_timestamp"),
-        hdr(le_long(b, 44)).alias("last_traded_price"),
-        tail(le_long(b, 52)).alias("last_traded_quantity"),
-        tail(le_long(b, 60)).alias("average_traded_price"),
-        tail(le_long(b, 68)).alias("volume_trade"),
-        tail(le_long(b, 92)).alias("open_price_of_the_day"),
-        tail(le_long(b, 100)).alias("high_price_of_the_day"),
-        tail(le_long(b, 108)).alias("low_price_of_the_day"),
-        tail(le_long(b, 116)).alias("closed_price"),
-        (~ok | ((mode >= 2) & ~full)).alias("is_corrupt"),
-    )
+    return df.select(F.col(frame_col)).mapInArrow(_decode_batches, WIRE_SCHEMA)
 
 
 def wire_to_ticks(decoded: DataFrame, with_ingest_ts: bool = False) -> DataFrame:

@@ -246,7 +246,7 @@ def frames_df(spark, frames: list[bytes], rows_per_partition: int = 500):
     Partition count is sized to the data (~rows_per_partition each,
     capped at the default parallelism): a local relation otherwise
     fans out to one task per core, and for a few thousand frames the
-    32-way pandas-UDF task/worker overhead dwarfs the decode itself."""
+    32-way Python-worker task overhead dwarfs the decode itself."""
     df = spark.createDataFrame([(f,) for f in frames], "frame binary")
     target = max(1, min(
         spark.sparkContext.defaultParallelism,

@@ -124,7 +124,7 @@ def decode_ticks_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined to the same config universe."""
     from angelone_clickhouse_spark.functions.exact import avg_fixed_g
     from angelone_clickhouse_spark.sources.decoder import (
-        decode_frames_native,
+        decode_frames,
         wire_to_ticks,
     )
     from angelone_clickhouse_spark.sources.frames import (
@@ -138,12 +138,7 @@ def decode_ticks_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
         # deterministic for fixed params; rewriting on every call put
         # ~0.3 s of driver-side parquet IO inside the benched region
         write_truth_sidecar(ENRICHED_TRUTH_PATH, truth)
-    # JVM-native decode: at a few thousand frames the fixed Arrow
-    # round-trip dominates the pandas-UDF path, while the pure-column
-    # plan stays in whole-stage codegen (the pandas decoder wins at
-    # bulk-ingest batch sizes — see bench.py's ingest section — and is
-    # asserted equal in tests/test_decoder.py)
-    ticks = wire_to_ticks(decode_frames_native(frames_df(spark, frames)))
+    ticks = wire_to_ticks(decode_frames(frames_df(spark, frames)))
     cfg = enriched_token_config(spark)
     return (
         ticks.join(F.broadcast(cfg), "token")

@@ -3,7 +3,7 @@
 ``minute_bars`` runs the windowed-OHLCV aggregate as a batch query over
 the canonical tick table so DuckDB can oracle-check it (date_trunc is
 the batch spelling of a 1-minute tumbling window). ``decode_ticks``
-exercises encoder -> pandas-UDF decoder -> storage projection -> exact
+exercises encoder -> Arrow decoder -> storage projection -> exact
 dedup on a deterministic generated frame stream; the frame generator
 persists its PRE-ENCODING field values as a parquet sidecar
 (frames.write_truth_sidecar), so DuckDB aggregates the ground truth
@@ -21,10 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from angelone_clickhouse_spark.functions.exact import sum_fixed
-from angelone_clickhouse_spark.sources.decoder import (
-    decode_frames_native,
-    wire_to_ticks,
-)
+from angelone_clickhouse_spark.sources.decoder import decode_frames, wire_to_ticks
 from angelone_clickhouse_spark.sources.frames import (
     frames_df,
     generate_frames_and_truth,
@@ -158,14 +155,9 @@ def daily_bars_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def decode_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generated wire frames (with duplicates and truncations) through
     the full decode path, aggregated per token. Oracle-checked against
-    the generator's truth sidecar.
-
-    Uses the JVM-native decoder: at this row count the pandas path's
-    fixed Arrow round-trip dominates (the pandas decoder wins at
-    bulk-ingest batch sizes — bench.py ingest section — and the two are
-    asserted equal in tests/test_decoder.py)."""
+    the generator's truth sidecar."""
     frames = _decode_inputs()
-    decoded = wire_to_ticks(decode_frames_native(frames_df(spark, frames)))
+    decoded = wire_to_ticks(decode_frames(frames_df(spark, frames)))
     deduped = decoded.dropDuplicates(["token", "sequence_number"])
     return deduped.groupBy("token").agg(
         F.count(F.lit(1)).alias("n_ticks"),

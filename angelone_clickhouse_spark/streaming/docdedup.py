@@ -26,7 +26,7 @@ Semantics per epoch (MinHash-estimated, same threshold as
 
 Crash/retry contract (foreachBatch is AT-LEAST-ONCE): both sinks are
 epoch-prefixed flat parquet appends following ingest.py's
-``_commit_epoch_files`` device — a retried epoch first SWEEPS its own
+``commit_epoch_partitioned`` device — a retried epoch first SWEEPS its own
 ``e{epoch}-`` files from BOTH the verdict dir and the index dir, so
 the index read never sees a crashed attempt's partial append and the
 recomputation is bit-deterministic (MinHash is a pure function of the

@@ -18,7 +18,9 @@ Deliberate deviations from the reference, all flagged in SURVEY §3.4:
 - duplicate frames are dropped on (token, sequence_number) using the
   wire field the reference discards (SURVEY §2.3 streaming-dedup row).
 
-Scale notes: decode+project is narrow (no shuffle); dropDuplicates
+Scale notes: decode+project is narrow (no shuffle): one vectorized
+``mapInArrow`` pass per input partition (sources/decoder.py), so decode
+parallelism is the frame source's partition count; dropDuplicates
 shuffles on the dedup key with watermark-bounded state; the sink writes
 one file per partition per epoch — at 100 TB you'd widen
 `trigger(processingTime)` and compact small files asynchronously, but
@@ -105,11 +107,6 @@ def decode_tick_stream(frames: DataFrame, watermark: str = "1 hour") -> DataFram
     return ticks.dropDuplicates(["token", "sequence_number"])
 
 
-# Backward-compatible name for the shared committer (the full
-# at-least-once contract is documented once, in epoch_commit.py).
-_commit_epoch_files = commit_epoch_partitioned
-
-
 def make_epoch_appender(
     out_dir: str, max_records_per_file: int | None = None
 ):
@@ -135,7 +132,7 @@ def make_epoch_appender(
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         writer.partitionBy("date").parquet(staging)
-        _commit_epoch_files(staging, out_dir, epoch_id)
+        commit_epoch_partitioned(staging, out_dir, epoch_id)
         shutil.rmtree(staging, ignore_errors=True)
 
     return write_epoch

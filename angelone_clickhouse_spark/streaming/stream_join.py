@@ -44,7 +44,7 @@ def tick_sides(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     if not base.isStreaming:
         # both sides derive from this plan — materialize once so the
-        # pandas-UDF decode doesn't execute twice (streaming DFs can't
+        # Arrow decode doesn't execute twice (streaming DFs can't
         # checkpoint; there each side is its own stateful scan anyway)
         base = base.localCheckpoint(eager=True)
     lite = (

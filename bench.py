@@ -171,8 +171,9 @@ def main() -> None:
                             continue
                         for sid in ji.stageIds:
                             si = tracker.getStageInfo(sid)
-                            if si is not None and si.numTasks > 0:
-                                n_tasks += si.numTasks
+                            # completed tasks: a skipped stage adds none
+                            if si is not None:
+                                n_tasks += si.numCompletedTasks
                     query_task_counts[name] = n_tasks
         canary_runs.append(_canary_sample())  # one point per pass end
     # a query is either timed (all runs succeeded) or failed — never

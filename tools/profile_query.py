@@ -78,9 +78,10 @@ def main() -> None:
                     continue
                 for sid in ji.stageIds:
                     si = tracker.getStageInfo(sid)
-                    if si is not None and si.numTasks > 0:
+                    # completed tasks: a skipped stage adds none
+                    if si is not None and si.numCompletedTasks > 0:
                         n_stages += 1
-                        n_tasks += si.numTasks
+                        n_tasks += si.numCompletedTasks
             per_run.append(
                 {
                     "secs": secs,
