@@ -74,15 +74,6 @@ def avg_fixed_g(col: str | Column, grid_scale: int, alias: str) -> Column:
     return (avg_units / F.lit(float(mult))).alias(alias)
 
 
-def avg_fixed_g_sql(expr: str, grid_scale: int, alias: str) -> str:
-    mult = 10**grid_scale
-    return (
-        f"CAST((sum(CAST(round(({expr}) * {mult}) AS BIGINT)) "
-        f"+ count(({expr})) // 2) "
-        f"// count(({expr})) AS DOUBLE) / {mult} AS {alias}"
-    )
-
-
 def sum_fixed_round2(col: Column, grid_scale: int, alias: str) -> Column:
     """Half-up-to-2-decimals sum of a column whose values lie on the
     10^-grid_scale grid (e.g. price*(1-disc) is exact at 4 decimals,

@@ -41,6 +41,9 @@ from angelone_clickhouse_spark.sources.tables import load_table
 DECON_N = 5
 # Every 50th doc plays the "held-out benchmark" role.
 BENCH_MOD = 50
+# Winnowing window (shingle hashes per rolling minimum) shared by
+# text.text_fingerprint and decontaminate_fingerprint.
+FP_WINDOW = 4
 # sequence_pack: token budget per packed training sequence.
 PACK_BUDGET = 512
 # sample_stratified: per-language keep-rate numerators out of 100.
@@ -434,7 +437,6 @@ def _winnow_fingerprints(
     from angelone_clickhouse_spark.operators.dedup import (
         spread_low_parallelism,
     )
-    from angelone_clickhouse_spark.operators.text import FP_WINDOW
 
     # map-side md5+rolling-min stage: spread a below-cores scan first
     docs = spread_low_parallelism(docs, "doc_id", barrier=True)
@@ -742,11 +744,9 @@ FROM flagged f LEFT JOIN bench_grams b ON b.gram = f.gram
 GROUP BY f.doc_id
 """
 
-from angelone_clickhouse_spark.operators.text import FP_WINDOW as _FPW  # noqa: E402
-
 ORACLES_R4["decontaminate_fingerprint"] = (
     ORACLES_R4["decontaminate_fingerprint"]
-    .replace("__FPW__", str(_FPW))
+    .replace("__FPW__", str(FP_WINDOW))
     .replace("__BM__", str(BENCH_MOD))
 )
 ORACLES.update(ORACLES_R4)

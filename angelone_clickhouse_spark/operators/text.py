@@ -21,6 +21,7 @@ from angelone_clickhouse_spark.materialize import (
     checkpoint_sized as _checkpoint_sized,
 )
 from angelone_clickhouse_spark.operators.dedup import DEEP_GROUP_BOUND
+from angelone_clickhouse_spark.operators.pipeline import FP_WINDOW
 from angelone_clickhouse_spark.functions.exact import avg_fixed
 from angelone_clickhouse_spark.sources.tables import load_table
 
@@ -173,9 +174,6 @@ SELECT lang, pred_lang, count(*) AS n_docs
 FROM pred
 GROUP BY lang, pred_lang
 """
-
-
-FP_WINDOW = 4
 
 
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:

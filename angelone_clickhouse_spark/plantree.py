@@ -45,16 +45,6 @@ def nodes_with_ancestors(plan_str: str) -> list[tuple[str, list[str]]]:
     return out
 
 
-def ancestors_of(plan_str: str, node_substr: str) -> list[list[str]]:
-    """Ancestor chains (root-first) of every node whose text contains
-    ``node_substr``."""
-    return [
-        anc
-        for text, anc in nodes_with_ancestors(plan_str)
-        if node_substr in text
-    ]
-
-
 def scan_ancestors(plan_str: str, path_fragment: str) -> list[list[str]]:
     """Ancestor chains of every FileScan whose text mentions
     ``path_fragment`` (a directory / table-location fragment)."""

@@ -15,6 +15,21 @@ overridden down for local test runs):
   Parquet reader refuses by default; we read nanos as long and convert
   to a microsecond timestamp in the loader (sources/tables.py) — a
   single integer division, still fully codegen'd.
+- Python workers: ``spark.python.daemon.module`` points at
+  ``pyworker.py``, pyspark's own daemon with one patch. Every Python
+  task (the ingest decode once per epoch, every batch UDF) starts with
+  ``importlib.invalidate_caches()``, which before Python 3.12 makes each
+  of a reused worker's ~16 ``pyspark.zip`` importers re-read the
+  archive's 1.3k-entry directory (CPython gh-103200, fixed in 3.12):
+  ~0.1 s of fixed cost per task on a 4-core host, paid on the critical
+  path of every live ingest epoch. The patch re-reads an archive only
+  when its mtime or size changed, so it is applied on Python < 3.12
+  only; on 3.12+ the module is the stock daemon.
+  ``spark.executorEnv.PYTHONPATH`` is the package's parent directory, so
+  the daemon and every UDF import the engine from where it lives,
+  whatever the driver's working directory. On a cluster the package
+  must sit at the same path on the executors (or ship via
+  ``--py-files``).
 """
 
 from __future__ import annotations
@@ -24,6 +39,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -59,6 +75,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "angelone_clickhouse_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

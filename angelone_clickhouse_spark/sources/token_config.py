@@ -43,7 +43,8 @@ EXCHANGE_TYPE_MAP = {
 
 
 def _quote(s: str) -> str:
-    return "'" + str(s).replace("'", "''") + "'"
+    """Spark SQL string literal: ``\\`` is the literal's escape character."""
+    return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def load_token_config(

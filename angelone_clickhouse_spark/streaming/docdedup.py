@@ -63,7 +63,6 @@ from angelone_clickhouse_spark.operators.dedup import (
 )
 from angelone_clickhouse_spark.streaming.epoch_commit import (
     await_or_raise,
-    commit_epoch_flat,
     sweep_prefix,
 )
 
@@ -77,12 +76,6 @@ SIG_SCHEMA = "doc_id long, " + ", ".join(
 # registry-entry replay layout: documents split into this many epoch
 # files by doc_id % N_STREAM_EPOCHS, replayed in epoch order
 N_STREAM_EPOCHS = 4
-
-
-# Backward-compatible names for the shared committer (the full
-# at-least-once contract is documented once, in epoch_commit.py).
-_sweep_prefix = sweep_prefix
-_commit_epoch_flat = commit_epoch_flat
 
 
 def _read_index(
@@ -340,7 +333,7 @@ def make_docdedup_epoch_writer(
         )
 
         spark = batch.sparkSession
-        _sweep_prefix(out_dir, f"e{epoch_id}-")
+        sweep_prefix(out_dir, f"e{epoch_id}-")
         sweep_epoch_keyed(index_dir, epoch_id)
         if retention_epochs is not None:
             # expire BEFORE reading, not after committing: a retried

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 from angelone_clickhouse_spark.sources.token_config import (
+    _quote,
     decode_ticks_enriched,
     enriched_token_config,
     load_token_config,
@@ -12,6 +13,11 @@ def test_config_loads_with_schema(spark):
     rows = {r.token: (r.symbol, r.exchange) for r in cfg.collect()}
     assert rows["2885"] == ("RELIANCE", "nse_cm")
     assert len(rows) == 7
+
+
+def test_quote_round_trips_escape_characters(spark):
+    for s in ["a\\b", "tail\\", "\\'", "it's", "''", "x\ny", "\\n", "plain"]:
+        assert spark.sql(f"SELECT {_quote(s)} AS v").first().v == s, s
 
 
 def test_unknown_exchange_dropped(spark):
