@@ -62,12 +62,24 @@ def observed(obs, what: str = "observation", timeout_s: float = OBS_TIMEOUT_S) -
     epoch/round loop. Call sites read only after the observed action
     has completed (eager checkpoint / collect), so the first poll
     normally succeeds immediately; the JVM-side ``getRowOrEmpty``
-    waits <=100 ms per poll."""
+    waits <=100 ms per poll.
+
+    The poll reads PySpark's private ``Observation._jo`` handle (pinned
+    by tests/test_materialize.py); when it is missing — the observation
+    was never attached with ``DataFrame.observe``, or a PySpark upgrade
+    renamed it — this raises RuntimeError at once."""
     import time
 
+    jo = getattr(obs, "_jo", None)
+    if jo is None:
+        raise RuntimeError(
+            f"{what}: Observation has no JVM handle (obs._jo is None); "
+            "it was never attached with DataFrame.observe, or this "
+            "PySpark no longer exposes Observation._jo"
+        )
     deadline = time.monotonic() + timeout_s
     while True:
-        if obs._jo.getRowOrEmpty().isDefined():
+        if jo.getRowOrEmpty().isDefined():
             return obs.get  # metrics present: non-blocking now
         if time.monotonic() >= deadline:
             raise RuntimeError(

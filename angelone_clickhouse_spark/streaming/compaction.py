@@ -90,7 +90,7 @@ def recover_compaction(sink_dir: str) -> list[str]:
 
 # --- flat epoch-sink compaction (VERDICT r10 #6) ---------------------
 #
-# The epoch committer (epoch_commit.commit_epoch_flat) appends one
+# The epoch committer (epoch_commit.commit_epoch) appends one
 # ``e{epoch}-`` file per epoch per sink forever — the docdedup /
 # novelty / embdedup verdict and index dirs grow one file per trigger.
 # The folder below folds CLOSED epochs into consolidated ``c-`` files
@@ -145,7 +145,7 @@ def compact_flat_epoch_sink(
     """Fold every epoch file older than the newest ``keep_recent``
     epochs — plus any prior consolidation — into one consolidated
     ``c-`` file set. Readers (spark.read.parquet over the dir,
-    _read_index) see identical rows before and after (asserted in
+    embdedup.read_vec_index) see identical rows before and after (asserted in
     tests/test_compaction.py's soak); returns
     {rows, files_before, files_after} or None if nothing to fold."""
     recover_flat_compaction(out_dir)

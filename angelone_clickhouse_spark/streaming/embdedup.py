@@ -26,12 +26,9 @@ the sequential-fold JVM cosine that is bit-identical to DuckDB's
 list_dot_product — so the epoch-unrolled brute-force oracle checks
 the whole pruned path verbatim.
 
-Crash/retry contract: both sinks (verdicts, index) go through the
-shared ``epoch_commit`` committer — a retried epoch sweeps its own
-``e{epoch}-`` files from both dirs before reading the index, so the
-recomputation is bit-deterministic. Same contract as docdedup,
-tested the same three ways (stream==batch, retry idempotence,
-restart resume).
+Both sinks (verdicts, index) commit through ``epoch_commit``, whose
+docstring states the retry contract. Tested the same three ways as
+docdedup: stream==batch, retry idempotence, restart resume.
 
 Scale notes (100 TB): ``stream_semdedup`` probes the index through a
 full matmul scan — exact, but O(|index|) FLOPs per epoch forever as
@@ -53,25 +50,27 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from angelone_clickhouse_spark.streaming.workdirs import owned_tmpdir
 from angelone_clickhouse_spark.operators.dedup import COSINE_THRESHOLD
-from angelone_clickhouse_spark.streaming.docdedup import (
-    N_STREAM_EPOCHS,
-    _read_index,
-)
 from angelone_clickhouse_spark.streaming.epoch_commit import (
-    await_or_raise,
-    commit_epoch_flat,
-    sweep_prefix,
+    N_STREAM_EPOCHS,
+    REPLAY_TABLES,
+    replay_gate,
+)
+from angelone_clickhouse_spark.streaming.keyed_index import (
+    PART_COL,
+    checkpoint_with_pks,
+    pk_of,
+    read_keyed,
 )
 
-EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
+EMB_SCHEMA = REPLAY_TABLES["embeddings"][1]
 INDEX_SCHEMA = "vec_id long, v array<double>"
 VERDICT_SCHEMA = (
     "vec_id long, dup_of_index long, dup_of_batch long, keep boolean"
@@ -207,89 +206,25 @@ def semdedup_epoch(
     return verdicts, kept_vec
 
 
-def make_embdedup_epoch_writer(out_dir: str, index_dir: str):
-    """The foreachBatch function: sweep this epoch's files from both
-    sinks (retry idempotence), read the index WITHOUT them, compute,
-    commit verdicts then kept vectors."""
-
-    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
-        from angelone_clickhouse_spark.streaming.epoch_commit import (
-            commit_epoch_flat2,
-        )
-
-        spark = batch.sparkSession
-        sweep_prefix(out_dir, f"e{epoch_id}-")
-        sweep_prefix(index_dir, f"e{epoch_id}-")
-        index_vec = _read_index(spark, index_dir, INDEX_SCHEMA)
-        verdicts, kept_vec = semdedup_epoch(batch, index_vec)
-        # checkpoint: verdicts feeds BOTH fused-union branches (its
-        # own rows + the kept_vec filter); the fused committer stages
-        # both sinks in ONE job (r16 — was two commit_epoch_flat jobs)
-        verdicts = verdicts.localCheckpoint(eager=True)
-        commit_epoch_flat2(verdicts, out_dir, kept_vec, index_dir, epoch_id)
-
-    return write_epoch
+def read_vec_index(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The flat survivor-vector index, or an empty frame before the
+    first epoch commits."""
+    if os.path.isdir(index_dir) and os.listdir(index_dir):
+        return spark.read.schema(INDEX_SCHEMA).parquet(index_dir)
+    return spark.createDataFrame([], INDEX_SCHEMA)
 
 
-def semdedup_stream(
-    spark: SparkSession,
-    emb_dir: str,
-    out_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    timeout_s: int = 600,
-) -> None:
-    """Run the gate over an embedding file stream to completion
-    (availableNow); one replay file per epoch."""
-    stream = (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(emb_dir)
+def semdedup_gate(
+    batch: DataFrame, index_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The exact gate's epoch function: returns (verdicts, kept
+    vectors), both flat sinks."""
+    verdicts, kept_vec = semdedup_epoch(
+        batch, read_vec_index(batch.sparkSession, index_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            make_embdedup_epoch_writer(out_dir, index_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q, timeout_s, "semdedup stream")
-
-
-def write_emb_epoch_replay(
-    spark: SparkSession, sf_dir: str, emb_dir: str
-) -> None:
-    """Split the embeddings table into N_STREAM_EPOCHS single-file
-    epochs (epoch = vec_id % N_STREAM_EPOCHS) with strictly
-    increasing mtimes (the file-source ordering contract — see
-    ingest.py's operational note)."""
-    import shutil
-
-    from angelone_clickhouse_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    os.makedirs(emb_dir, exist_ok=True)
-    base = 1_000_000_000
-    for k in range(N_STREAM_EPOCHS):
-        staging = os.path.join(emb_dir + ".stage", f"epoch-{k}")
-        shutil.rmtree(staging, ignore_errors=True)
-        (
-            emb.filter((F.col("vec_id") % N_STREAM_EPOCHS) == k)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        part = [n for n in os.listdir(staging) if n.startswith("part-")][0]
-        dst = os.path.join(emb_dir, f"epoch-{k}.parquet")
-        os.rename(os.path.join(staging, part), dst)
-        os.utime(dst, (base + 10 * k, base + 10 * k))
-        shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(emb_dir + ".stage", ignore_errors=True)
-
-
-_REPLAY_CACHE: dict[str, str] = {}
+    # verdicts feeds both sinks (its own rows + the kept_vec filter):
+    # without the checkpoint the commit job recomputes the epoch twice
+    return verdicts.localCheckpoint(eager=True), kept_vec
 
 
 def stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -299,18 +234,8 @@ def stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the same epoch sequence (epoch k pairs against
     kept vectors of epochs < k plus smaller ids of epoch k), so a
     green row proves the stream's cumulative index state exact."""
-    emb_dir = _REPLAY_CACHE.get(sf_dir)
-    if emb_dir is None:
-        emb_dir = os.path.join(
-            owned_tmpdir(prefix="stream_semdedup_"), "in"
-        )
-        write_emb_epoch_replay(spark, sf_dir, emb_dir)
-        _REPLAY_CACHE[sf_dir] = emb_dir
-    work = owned_tmpdir(prefix="stream_semdedup_run_")
-    out_dir = os.path.join(work, "verdicts")
-    index_dir = os.path.join(work, "index")
-    semdedup_stream(
-        spark, emb_dir, out_dir, index_dir, os.path.join(work, "ckpt")
+    out_dir, _ = replay_gate(
+        spark, sf_dir, "embeddings", "stream_semdedup", semdedup_gate
     )
     return spark.read.schema(VERDICT_SCHEMA).parquet(out_dir)
 
@@ -503,11 +428,6 @@ KEYED_LSH_SCHEMA = (
 def _keyed_lsh_rows(kept_vec: DataFrame) -> DataFrame:
     """Survivor rows (INDEX_LSH_SCHEMA) -> one replica per cell with
     the partition bucket attached."""
-    from angelone_clickhouse_spark.streaming.keyed_index import (
-        PART_COL,
-        pk_of,
-    )
-
     return kept_vec.select(
         F.explode("cells").alias("cell_key"), "vec_id", "v", "cells"
     ).withColumn(PART_COL, pk_of("cell_key"))
@@ -521,8 +441,6 @@ def read_lsh_index(
     vec_id (they are identical by construction). Inspection/test
     reader; the epoch hot path uses the raw replica rows directly
     (:func:`semdedup_lsh_epoch_keyed`)."""
-    from angelone_clickhouse_spark.streaming.keyed_index import read_keyed
-
     return (
         read_keyed(spark, index_dir, KEYED_LSH_SCHEMA, pks=pks)
         .dropDuplicates(["vec_id"])
@@ -653,154 +571,72 @@ def semdedup_lsh_epoch_keyed(
     return verdicts, kept_vec
 
 
-def make_embdedup_lsh_epoch_writer(
-    out_dir: str,
+def semdedup_lsh_gate(
+    batch: DataFrame,
     index_dir: str,
     planes: int,
     n_tables: int,
     n_flips: int,
-    retention_epochs: int | None = None,
-):
-    """foreachBatch writer of the LSH-fronted gate: sweep both sinks
-    (retry idempotence), derive the epoch's candidate partitions from
-    its own probe keys (driver-side, bounded by P_KEYED), read ONLY
-    those partitions of the keyed survivor index, compute, commit —
-    verdicts flat, kept survivors into the keyed store.
-
-    ``retention_epochs`` (opt-in TTL, keyed_index.expire_epochs_keyed)
-    keeps only the last N epochs' survivors gating new arrivals —
-    bounded index growth, with the deliberate semantic that a
-    duplicate of an expired survivor is treated as new. The default
-    None keeps the oracle-checked grow-forever semantics."""
-
-    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
-        from angelone_clickhouse_spark.streaming.keyed_index import (
-            checkpoint_with_pks,
-            commit_epoch_fused,
-            pk_of,
-            read_keyed,
-            sweep_epoch_keyed,
-        )
-
-        spark = batch.sparkSession
-        sweep_prefix(out_dir, f"e{epoch_id}-")
-        sweep_epoch_keyed(index_dir, epoch_id)
-        if retention_epochs is not None:
-            # expire BEFORE reading, not after committing: a retried
-            # epoch must see the exact index state the first attempt
-            # saw (expiry is idempotent; post-commit expiry would
-            # shrink the gating set between attempts and break the
-            # bit-deterministic recomputation contract)
-            from angelone_clickhouse_spark.streaming.keyed_index import (
-                expire_epochs_keyed,
-            )
-
-            expire_epochs_keyed(index_dir, epoch_id - retention_epochs)
-        # one cell-projection pass per epoch: the checkpointed celled
-        # frame feeds the probe-partition collect AND the epoch body
-        # (it used to be computed by both). r16: the pk-occupancy
-        # bitmap rides the checkpoint job as observed metrics (one
-        # boolean per bucket over each row's probe-key array) — one
-        # driver round-trip per epoch instead of checkpoint + the
-        # explode/distinct/collect job.
-        new_vec, pks = checkpoint_with_pks(
-            _with_cells(_as_double_vecs(batch), planes, n_tables),
-            pk_arr=F.transform(
-                _probe_keys(planes, n_flips), lambda k: pk_of(k)
-            ),
-        )
-        # pruned scan of the raw replica rows; the unused cells
-        # column is projected away (column pruning at the scan)
-        stored = read_keyed(
-            spark,
-            index_dir,
-            "cell_key long, vec_id long, v array<double>",
-            pks=pks,
-        )
-        verdicts, kept_vec = semdedup_lsh_epoch_keyed(
-            batch, stored, planes, n_tables, n_flips, new_vec=new_vec
-        )
-        # checkpoint: verdicts feeds BOTH fused-union branches (its
-        # own rows + the kept_vec filter), so without it the fused
-        # job would run the collision join twice
-        verdicts = verdicts.localCheckpoint(eager=True)
-        commit_epoch_fused(
-            verdicts, out_dir, _keyed_lsh_rows(kept_vec), index_dir,
-            epoch_id,
-        )
-
-
-    return write_epoch
-
-
-def semdedup_lsh_stream(
-    spark: SparkSession,
-    emb_dir: str,
-    out_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    planes: int,
-    n_tables: int | None = None,
-    n_flips: int | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_s: int = 600,
-) -> None:
-    """Run the LSH-fronted gate over an embedding file stream to
-    completion. ``planes`` is FIXED for the index lifetime (a real
-    deployment sizes it once from the expected corpus; the registry
-    op derives it from the replayed table's count with the
-    knn_graph_ann adaptive formula)."""
-    from angelone_clickhouse_spark.operators.embedding_fast import (
-        KNN_ANN_FLIPS,
-        KNN_ANN_TABLES,
+) -> tuple[DataFrame, DataFrame]:
+    """The LSH-fronted gate's epoch function: derive the epoch's
+    candidate partitions from its own probe keys (driver-side, bounded
+    by P_KEYED), read ONLY those partitions of the keyed survivor
+    index, and return (verdicts, kept survivors as keyed index rows).
+    ``planes`` is FIXED for the index lifetime (a real deployment sizes
+    it once from the expected corpus)."""
+    # one cell-projection pass per epoch: the checkpointed celled frame
+    # feeds the probe partitions AND the epoch body; its pk-occupancy
+    # bitmap (one boolean per bucket over each row's probe-key array)
+    # rides the checkpoint job as observed metrics
+    new_vec, pks = checkpoint_with_pks(
+        _with_cells(_as_double_vecs(batch), planes, n_tables),
+        pk_arr=F.transform(_probe_keys(planes, n_flips), lambda k: pk_of(k)),
     )
-
-    n_tables = KNN_ANN_TABLES if n_tables is None else n_tables
-    n_flips = KNN_ANN_FLIPS if n_flips is None else n_flips
-    stream = (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(emb_dir)
+    # pruned scan of the raw replica rows; the unused cells column is
+    # projected away (column pruning at the scan)
+    stored = read_keyed(
+        batch.sparkSession,
+        index_dir,
+        "cell_key long, vec_id long, v array<double>",
+        pks=pks,
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            make_embdedup_lsh_epoch_writer(
-                out_dir, index_dir, planes, n_tables, n_flips
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    verdicts, kept_vec = semdedup_lsh_epoch_keyed(
+        batch, stored, planes, n_tables, n_flips, new_vec=new_vec
     )
-    await_or_raise(q, timeout_s, "semdedup_lsh stream")
+    # verdicts feeds both sinks (its own rows + the kept_vec filter):
+    # without the checkpoint the commit job runs the collision join twice
+    verdicts = verdicts.localCheckpoint(eager=True)
+    return verdicts, _keyed_lsh_rows(kept_vec)
 
 
 def stream_semdedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible face of the LSH-fronted streaming gate: replay
     the embeddings table in N_STREAM_EPOCHS epochs; a new vector is
     gated only against LSH-collided survivors / smaller batch ids,
-    exactly verified. The DuckDB oracle unrolls the same epochs AND
-    derives the same md5 hyperplane cells in SQL, so a green row
-    proves both the collision semantics and the cumulative index
-    state."""
+    exactly verified. The plane count comes from the replayed table's
+    count with the knn_graph_ann adaptive formula. The DuckDB oracle
+    unrolls the same epochs AND derives the same md5 hyperplane cells
+    in SQL, so a green row proves both the collision semantics and the
+    cumulative index state."""
     from angelone_clickhouse_spark.operators.embedding_fast import (
+        KNN_ANN_FLIPS,
+        KNN_ANN_TABLES,
         _adaptive_planes,
     )
     from angelone_clickhouse_spark.sources.tables import load_table
 
-    emb_dir = _REPLAY_CACHE.get(sf_dir)
-    if emb_dir is None:
-        emb_dir = os.path.join(
-            owned_tmpdir(prefix="stream_semdedup_"), "in"
-        )
-        write_emb_epoch_replay(spark, sf_dir, emb_dir)
-        _REPLAY_CACHE[sf_dir] = emb_dir
     planes = _adaptive_planes(load_table(spark, sf_dir, "embeddings").count())
-    work = owned_tmpdir(prefix="stream_semdedup_lsh_run_")
-    out_dir = os.path.join(work, "verdicts")
-    index_dir = os.path.join(work, "index")
-    semdedup_lsh_stream(
-        spark, emb_dir, out_dir, index_dir, os.path.join(work, "ckpt"), planes
+    out_dir, _ = replay_gate(
+        spark,
+        sf_dir,
+        "embeddings",
+        "stream_semdedup_lsh",
+        partial(
+            semdedup_lsh_gate,
+            planes=planes,
+            n_tables=KNN_ANN_TABLES,
+            n_flips=KNN_ANN_FLIPS,
+        ),
     )
     return spark.read.schema(VERDICT_SCHEMA).parquet(out_dir)
 

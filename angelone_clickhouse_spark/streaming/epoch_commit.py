@@ -1,7 +1,9 @@
-"""THE epoch committer: retry-idempotent parquet appends for
-foreachBatch sinks, in one place (VERDICT r9 #5 — this device was
-previously spelled separately in ingest.py, docdedup.py and
-novelty.py).
+"""The epoch committer and the gate driver: every epoch-replay stream
+gate (stream_dedup_docs, stream_novelty_docs, stream_semdedup,
+stream_semdedup_lsh, stream_token_cms) commits through
+:func:`commit_epoch`, runs its epochs through :func:`make_epoch_writer`
+and replays its input table through :func:`replay_gate`. A gate supplies
+only its epoch function.
 
 The at-least-once contract, documented once
 -------------------------------------------
@@ -14,28 +16,42 @@ write therefore duplicates the epoch's rows on retry. The committer
 turns that into effective exactly-once for deterministic epoch
 computations, with three moves:
 
-1. **Stage** — write the epoch with a normal parquet job into a
-   private staging directory (``<out>.stage/epoch-<id>``), never into
-   the dataset.
-2. **Sweep** — delete every file in the dataset carrying this epoch's
+1. **Stage** — write every sink of the epoch in ONE parquet job into a
+   private staging directory (``<first sink>.stage/epoch-<id>``),
+   never into the datasets.
+2. **Sweep** — delete every file in every sink carrying this epoch's
    deterministic ``e{epoch_id}-`` prefix (a crashed earlier attempt's
-   leftovers). Readers between sweep and commit see the dataset
+   leftovers). The gate writer also sweeps before its epoch reads the
+   index, so readers between sweep and commit see the dataset
    *without* the epoch — exactly the state the retry is about to
-   recompute from, so index-consuming epochs (docdedup/novelty) stay
-   bit-deterministic.
-3. **Commit** — rename the staged part files into the dataset under
-   the epoch prefix. Renames are per-file (not atomic as a set), which
-   is why the sweep must run first on the retry path.
+   recompute from, and index-consuming epochs stay bit-deterministic.
+3. **Commit** — rename the staged part files into each sink under the
+   epoch prefix. Renames are per-file (not atomic as a set), which is
+   why every sink's sweep runs before any rename.
 
-At cluster scale the same contract comes from a committing table
-format (Delta/Iceberg transactional append); this device stands in for
-it on a plain filesystem and keeps the plan shape identical. The
-driver-side file loops are bounded by the trigger size (files per
-epoch), never by data size.
+Sink layouts. A sink frame that carries a ``pk`` column is KEYED
+(streaming/keyed_index.py): its files land as ``pk=<n>/e<id>-part-*``.
+Any other frame is FLAT: its files land as ``e<id>-part-*.parquet`` at
+the top of the sink. The staging write is ``partitionBy(_dest, pk)``
+over the union of all sinks, flat ones under ``pk=-1`` (pmod is never
+negative, so it cannot collide with a real bucket). The union takes the
+superset schema; every reader of these stores reads with an explicit
+schema, so another sink's null-padded columns are never scanned.
 
-``streaming/rollup.py`` deliberately does NOT use this module: its
-sink is a per-day REPLACEMENT (merge + swap with ``_last_epoch``
-markers), not an append — a different idempotence contract.
+Invariant: a sink with ZERO rows this epoch gets no epoch file, but its
+directory still exists. Per-epoch file presence is therefore not a
+marker for a committed epoch; readers scan whole directories.
+
+The commit removes only its own ``epoch-<id>`` staging directory:
+other users of a sink's ``.stage`` root (flat compaction's journal)
+are left alone. At cluster scale the same contract comes from a
+committing table format (Delta/Iceberg transactional append); the
+driver-side file loops are bounded by files per epoch, never by data
+size.
+
+``ingest.py`` stages its own date-partitioned write and commits it with
+:func:`commit_epoch_partitioned`; ``rollup.py`` replaces whole days
+instead of appending and does not use this module.
 """
 
 from __future__ import annotations
@@ -43,8 +59,28 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from angelone_clickhouse_spark.streaming.keyed_index import (
+    PART_COL,
+    expire_epochs_keyed,
+)
+from angelone_clickhouse_spark.streaming.workdirs import owned_tmpdir
+
+# registry-entry replay layout: a replayed table is split into this many
+# epoch files by <key> % N_STREAM_EPOCHS, replayed in epoch order
+N_STREAM_EPOCHS = 4
+# replayed tables: name -> (epoch key column, stream schema)
+REPLAY_TABLES = {
+    "documents": (
+        "doc_id",
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ),
+    "embeddings": ("vec_id", "vec_id long, embedding array<float>, label int"),
+}
+REPLAY_TIMEOUT_S = 600
+_DEST = "_dest"
 
 
 def epoch_prefix(epoch_id: int) -> str:
@@ -75,91 +111,47 @@ def sweep_prefix_partitioned(
                     os.remove(os.path.join(d, name))
 
 
-def commit_epoch_flat(
-    df: DataFrame,
-    out_dir: str,
-    epoch_id: int,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Stage ``df``, sweep, and commit into a FLAT dataset under the
-    epoch prefix. Default is a single part file (the existing sinks'
-    outputs are per-epoch small by construction: verdict rows, index
-    deltas); pass ``max_records_per_file`` for any sink whose epochs
-    can carry bulk data — the stage becomes a normal parallel write
-    size-capped by the option, and the commit renames every part
-    file, so no future sink silently inherits a single-task write
-    (VERDICT r10 minor #3)."""
-    staging = os.path.join(out_dir + ".stage", f"epoch-{epoch_id}")
-    shutil.rmtree(staging, ignore_errors=True)
-    if max_records_per_file is None:
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-    else:
-        df.write.mode("overwrite").option(
-            "maxRecordsPerFile", max_records_per_file
-        ).parquet(staging)
-    sweep_prefix(out_dir, epoch_prefix(epoch_id))
-    os.makedirs(out_dir, exist_ok=True)
-    for name in os.listdir(staging):
-        if name.startswith("part-"):
-            os.rename(
-                os.path.join(staging, name),
-                os.path.join(out_dir, epoch_prefix(epoch_id) + name),
-            )
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def commit_epoch_flat2(
-    df_a: DataFrame,
-    dir_a: str,
-    df_b: DataFrame,
-    dir_b: str,
-    epoch_id: int,
-) -> None:
-    """Commit an epoch's TWO flat sinks with ONE staging job (r16 —
-    the flat-gate sibling of keyed_index.commit_epoch_fused, same
-    rationale: at fixture scale the second staging job's fixed cost
-    is most of what the second sink adds). The union takes the
-    superset schema (unionByName(allowMissingColumns)); safe because
-    both datasets are read back with EXPLICIT schemas, so the
-    null-padded foreign columns are never scanned. Retry contract
-    unchanged: both sweeps run before any rename.
-
-    CHANGED INVARIANT vs commit_epoch_flat (ADVICE r16): the staging
-    write partitions by ``_dest``, so a side with ZERO rows produces
-    NO epoch part file in its dataset — per-epoch file PRESENCE is no
-    longer a marker for a committed-but-empty epoch. Every current
-    reader scans whole directories with an explicit schema, so this
-    is benign; do not key future logic off epoch-file existence for
-    sinks committed through this path."""
-    _dest = "_dest"
-    staging = os.path.join(dir_a + ".stage", f"epoch-{epoch_id}-fused2")
-    shutil.rmtree(staging, ignore_errors=True)
-    staged = (
-        df_a.withColumn(_dest, F.lit("a"))
-        .unionByName(
-            df_b.withColumn(_dest, F.lit("b")),
-            allowMissingColumns=True,
-        )
-        .coalesce(1)
-    )
-    staged.write.mode("overwrite").partitionBy(_dest).parquet(staging)
+def sweep_epoch(sink_dir: str, epoch_id: int) -> None:
+    """Delete this epoch's files from a flat or keyed sink."""
     prefix = epoch_prefix(epoch_id)
-    sweep_prefix(dir_a, prefix)
-    sweep_prefix(dir_b, prefix)
-    for tag, out_dir in (("a", dir_a), ("b", dir_b)):
-        src = os.path.join(staging, f"{_dest}={tag}")
-        os.makedirs(out_dir, exist_ok=True)
-        if os.path.isdir(src):
-            for name in os.listdir(src):
+    sweep_prefix(sink_dir, prefix)
+    sweep_prefix_partitioned(sink_dir, prefix, f"{PART_COL}=")
+
+
+def commit_epoch(epoch_id: int, sinks: list[tuple[DataFrame, str]]) -> None:
+    """Stage, sweep and commit one epoch's ``(frame, dir)`` sinks with
+    one Spark job (see the module docstring)."""
+    staging = os.path.join(sinks[0][1] + ".stage", f"epoch-{epoch_id}")
+    staged = None
+    for i, (df, _) in enumerate(sinks):
+        if PART_COL not in df.columns:
+            df = df.withColumn(PART_COL, F.lit(-1))
+        df = df.withColumn(_DEST, F.lit(i))
+        staged = (
+            df
+            if staged is None
+            else staged.unionByName(df, allowMissingColumns=True)
+        )
+    staged.coalesce(1).write.mode("overwrite").partitionBy(
+        _DEST, PART_COL
+    ).parquet(staging)
+    for _, sink_dir in sinks:
+        sweep_epoch(sink_dir, epoch_id)
+    prefix = epoch_prefix(epoch_id)
+    for i, (_, sink_dir) in enumerate(sinks):
+        os.makedirs(sink_dir, exist_ok=True)
+        src = os.path.join(staging, f"{_DEST}={i}")
+        for dpart in os.listdir(src) if os.path.isdir(src) else ():
+            dst = sink_dir
+            if dpart != f"{PART_COL}=-1":
+                dst = os.path.join(sink_dir, dpart)
+                os.makedirs(dst, exist_ok=True)
+            for name in os.listdir(os.path.join(src, dpart)):
                 if name.startswith("part-"):
                     os.rename(
-                        os.path.join(src, name),
-                        os.path.join(out_dir, prefix + name),
+                        os.path.join(src, dpart, name),
+                        os.path.join(dst, prefix + name),
                     )
-    # remove only THIS epoch's staging subdir (ADVICE r16): wiping the
-    # shared .stage root would delete any concurrent/leftover staging
-    # under it (e.g. a commit_epoch_flat call for the same sink) if
-    # the serial-epoch assumption is ever relaxed
     shutil.rmtree(staging, ignore_errors=True)
 
 
@@ -191,12 +183,105 @@ def commit_epoch_partitioned(
                 )
 
 
+def make_epoch_writer(epoch_fn, *sink_dirs: str, retention_epochs: int | None = None):
+    """The foreachBatch function of a gate. ``epoch_fn(batch,
+    index_dir)`` returns one frame per sink dir; ``index_dir`` is the
+    last sink, the store the epoch reads. The writer sweeps every sink,
+    then (opt-in ``retention_epochs``, keyed index only) expires index
+    epochs older than the window, runs the epoch and commits it.
+
+    Expiry runs BEFORE the read, not after the commit: a retried epoch
+    must see the exact index state the first attempt saw (expiry is
+    idempotent; post-commit expiry would shrink the gating set between
+    attempts). The default None keeps the oracle-checked grow-forever
+    semantics."""
+    index_dir = sink_dirs[-1]
+
+    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
+        for sink_dir in sink_dirs:
+            sweep_epoch(sink_dir, epoch_id)
+        if retention_epochs is not None:
+            expire_epochs_keyed(index_dir, epoch_id - retention_epochs)
+        frames = epoch_fn(batch, index_dir)
+        commit_epoch(epoch_id, list(zip(frames, sink_dirs, strict=True)))
+
+    return write_epoch
+
+
+def write_replay(
+    spark: SparkSession, sf_dir: str, table: str, replay_dir: str
+) -> None:
+    """Split ``table`` into N_STREAM_EPOCHS single-file epochs (epoch =
+    key % N_STREAM_EPOCHS) with strictly increasing mtimes, so the file
+    source replays them in epoch order."""
+    from angelone_clickhouse_spark.sources.tables import load_table
+
+    key = REPLAY_TABLES[table][0]
+    df = load_table(spark, sf_dir, table)
+    os.makedirs(replay_dir, exist_ok=True)
+    base = 1_000_000_000  # fixed epoch-seconds base: deterministic order
+    for k in range(N_STREAM_EPOCHS):
+        staging = os.path.join(replay_dir + ".stage", f"epoch-{k}")
+        df.filter((F.col(key) % N_STREAM_EPOCHS) == k).coalesce(
+            1
+        ).write.mode("overwrite").parquet(staging)
+        part = [n for n in os.listdir(staging) if n.startswith("part-")][0]
+        dst = os.path.join(replay_dir, f"epoch-{k}.parquet")
+        os.rename(os.path.join(staging, part), dst)
+        os.utime(dst, (base + 10 * k, base + 10 * k))
+    shutil.rmtree(replay_dir + ".stage", ignore_errors=True)
+
+
+def run_epochs(
+    spark: SparkSession, table: str, src_dir: str, writer, checkpoint_dir: str
+) -> None:
+    """Run ``writer`` over the file stream in ``src_dir`` to completion:
+    availableNow, one file per trigger = one epoch, mtime order."""
+    q = (
+        spark.readStream.schema(REPLAY_TABLES[table][1])
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(writer)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_or_raise(q, REPLAY_TIMEOUT_S, f"{table} replay")
+
+
+# one replay dir per (sf_dir, table): building it is harness setup, not
+# operator work; every gate run replays it into fresh sinks
+_REPLAY_CACHE: dict[tuple[str, str], str] = {}
+
+
+def replay_gate(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    name: str,
+    epoch_fn,
+    sinks: tuple[str, ...] = ("verdicts", "index"),
+) -> list[str]:
+    """Replay ``table`` in N_STREAM_EPOCHS epochs through a gate whose
+    epoch function is ``epoch_fn``, into fresh sinks under a
+    ``<name>_run_*`` work dir. Returns the sink dirs."""
+    src = _REPLAY_CACHE.get((sf_dir, table))
+    if src is None:
+        src = os.path.join(owned_tmpdir(prefix=f"replay_{table}_"), "in")
+        write_replay(spark, sf_dir, table, src)
+        _REPLAY_CACHE[(sf_dir, table)] = src
+    work = owned_tmpdir(prefix=f"{name}_run_")
+    dirs = [os.path.join(work, s) for s in sinks]
+    writer = make_epoch_writer(epoch_fn, *dirs)
+    run_epochs(spark, table, src, writer, os.path.join(work, "ckpt"))
+    return dirs
+
+
 def await_or_raise(q, timeout_s: int, what: str) -> None:
     """``awaitTermination(timeout)`` returns False when the query is
     STILL RUNNING — every replay runner must treat that as a hard
     error, because its caller is about to read the committed store
-    and a straggling query would make the read a partial state
-    (ADVICE r12 on stream_token_cms; applied to every runner in r13).
+    and a straggling query would make the read a partial state.
     Stops the query before raising so the store stops moving."""
     if not q.awaitTermination(timeout_s):
         q.stop()

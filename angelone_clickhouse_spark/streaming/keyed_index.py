@@ -31,28 +31,19 @@ epoch can never produce a candidate pair (the candidate join equates
 exact keys), so feeding the epoch function the pruned subset yields
 bit-identical verdicts — the driver oracles prove it end-to-end.
 
-Crash/retry contract: identical to the flat stores — every epoch's
-files carry the ``e{epoch}-`` prefix inside each partition dir, a
-retry sweeps them from every partition before reading
-(sweep_prefix_partitioned), and the commit stages then renames
-(commit_epoch_partitioned). At cluster scale the same contract comes
-from a committing table format partitioned the same way.
+Epochs append to the store through the one committer
+(epoch_commit.commit_epoch), as ``pk=<n>/e<id>-part-*`` files.
 """
 
 from __future__ import annotations
 
 import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from angelone_clickhouse_spark.materialize import observed
-from angelone_clickhouse_spark.streaming.epoch_commit import (
-    commit_epoch_partitioned,
-    sweep_prefix_partitioned,
-)
 
 # Partition-bucket count for every keyed survivor index. At fixture
 # scale a full replay epoch probes most buckets (LSH keys are uniform
@@ -161,109 +152,6 @@ def checkpoint_with_pks(
     ck = df.observe(obs, *metrics).localCheckpoint(eager=True)
     got = observed(obs, "checkpoint_with_pks bucket occupancy")
     return ck, [p for p in range(P_KEYED) if got[f"p{p}"]]
-
-
-def commit_epoch_fused(
-    flat_df: DataFrame,
-    flat_dir: str,
-    keyed_df_with_pk: DataFrame,
-    keyed_dir: str,
-    epoch_id: int,
-    bulk: bool = False,
-) -> None:
-    """Commit an epoch's TWO sinks (flat verdicts + keyed survivor
-    append) with ONE staging job.
-
-    Every keyed gate writer used to run two Spark jobs per epoch —
-    ``commit_epoch_flat(verdicts)`` then ``commit_epoch_keyed(
-    survivor rows)`` — and at fixture scale that second job's fixed
-    cost (scheduling + staging-dir churn) is most of what the keyed
-    store added over the r11 flat layout (VERDICT r12 task #3: the
-    replay gates' weather-normalized regression is commit overhead,
-    not dataflow). Fusing stages both sinks in one
-    ``partitionBy(_dest, pk)`` write — flat rows under a sentinel
-    ``pk=-1`` (pmod is never negative, so it cannot collide with a
-    real bucket) — then renames each side into its dataset under the
-    usual ``e{epoch}-`` prefix. The union takes the SUPERSET schema
-    (``unionByName(allowMissingColumns)``); that is safe because
-    every consumer of both stores reads with an EXPLICIT schema, so
-    the null-padded foreign columns are never even scanned, and
-    all-null parquet columns cost bytes only in the footer.
-
-    Retry contract unchanged: both sweeps run before the renames, the
-    staged write is deterministic, and the renames are per-file under
-    the epoch prefix — identical to running the two commits
-    back-to-back, minus one job."""
-    from angelone_clickhouse_spark.streaming.epoch_commit import (
-        commit_epoch_partitioned,
-        epoch_prefix,
-        sweep_prefix,
-    )
-
-    _dest = "_dest"
-    staging = os.path.join(keyed_dir + ".stage", f"epoch-{epoch_id}-fused")
-    shutil.rmtree(staging, ignore_errors=True)
-    flat_branch = flat_df.withColumn(_dest, F.lit("flat")).withColumn(
-        PART_COL, F.lit(-1).cast("int")
-    )
-    keyed_branch = keyed_df_with_pk.withColumn(_dest, F.lit("keyed"))
-    # default: single task — both sinks' epoch payloads are
-    # trigger-bounded (same contract as commit_epoch_flat's
-    # coalesce(1) default). bulk=True is for a sink whose epochs
-    # carry bulk data: ONLY the keyed branch is shuffled (so its
-    # stage tasks own whole pk partitions); the flat branch keeps
-    # its natural partitioning — union concatenates partitions
-    # without co-partitioning them, so the flat rows reach the
-    # dynamic partitionBy writer shuffle-free. (The first cut
-    # repartitioned the whole union on (_dest, pk), which shuffled
-    # the flat side the old two-job path never shuffled and measured
-    # SLOWER than two jobs at sf0.1 — bench `keyed_commit_secs`.)
-    if bulk:
-        staged = flat_branch.unionByName(
-            keyed_branch.repartition(F.col(PART_COL)),
-            allowMissingColumns=True,
-        )
-    else:
-        staged = flat_branch.unionByName(
-            keyed_branch, allowMissingColumns=True
-        ).coalesce(1)
-    staged.write.mode("overwrite").partitionBy(
-        _dest, PART_COL
-    ).parquet(staging)
-    prefix = epoch_prefix(epoch_id)
-    flat_staged = os.path.join(staging, f"{_dest}=flat", f"{PART_COL}=-1")
-    # BOTH sides' sweeps run before ANY rename, so the docstring's
-    # "both sweeps run before the renames" holds literally (ADVICE
-    # r13 — the keyed sweep used to run inside
-    # commit_epoch_partitioned AFTER the flat renames; sweeping is
-    # idempotent, so the inner re-sweep below stays harmless).
-    sweep_prefix(flat_dir, prefix)
-    sweep_epoch_keyed(keyed_dir, epoch_id)
-    os.makedirs(flat_dir, exist_ok=True)
-    if os.path.isdir(flat_staged):
-        for name in os.listdir(flat_staged):
-            if name.startswith("part-"):
-                os.rename(
-                    os.path.join(flat_staged, name),
-                    os.path.join(flat_dir, prefix + name),
-                )
-    keyed_staged = os.path.join(staging, f"{_dest}=keyed")
-    os.makedirs(keyed_dir, exist_ok=True)
-    if os.path.isdir(keyed_staged):
-        commit_epoch_partitioned(
-            keyed_staged, keyed_dir, epoch_id,
-            partition_prefix=f"{PART_COL}=",
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(keyed_dir + ".stage", ignore_errors=True)
-
-
-def sweep_epoch_keyed(index_dir: str, epoch_id: int) -> None:
-    """Retry path: drop a crashed attempt's files from every
-    partition before the epoch reads the index."""
-    sweep_prefix_partitioned(
-        index_dir, f"e{epoch_id}-", partition_prefix=f"{PART_COL}="
-    )
 
 
 def expire_epochs_keyed(index_dir: str, keep_from_epoch: int) -> int:

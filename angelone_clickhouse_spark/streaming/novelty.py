@@ -4,9 +4,8 @@ grams extend the index.
 
 The streaming twin of ``operators/mixing.novelty_ngram_rate``, built
 on the same epoch machinery as the survivor-index dedup gate
-(streaming/docdedup.py): file-replay epochs, epoch-prefixed
-crash-idempotent flat parquet sinks, index read that never sees a
-crashed attempt's partial append. The reference has no document
+(streaming/epoch_commit.py: file-replay epochs, one retry-idempotent
+committer). The reference has no document
 surface at all (db/clickhouse.go only INSERTs/SELECTs tick rows), so
 like the rest of the document ladder this is a north-star extension.
 
@@ -46,21 +45,19 @@ bounded by probed-partition occupancy, not |distinct grams seen|.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from angelone_clickhouse_spark.streaming.workdirs import owned_tmpdir
 from angelone_clickhouse_spark.operators.mixing import NOVELTY_N
-from angelone_clickhouse_spark.streaming.docdedup import (
-    DOCS_SCHEMA,
-    N_STREAM_EPOCHS,
-    write_epoch_replay,
-)
 from angelone_clickhouse_spark.streaming.epoch_commit import (
-    await_or_raise,
-    sweep_prefix,
+    N_STREAM_EPOCHS,
+    replay_gate,
+)
+from angelone_clickhouse_spark.streaming.keyed_index import (
+    P_KEYED,
+    PART_COL,
+    checkpoint_with_pks,
+    read_keyed,
 )
 
 GRAM_SCHEMA = "gram string"
@@ -131,125 +128,43 @@ def novelty_epoch(
 # probed-partition occupancy, not |distinct grams seen|.
 
 def _gram_pk() -> F.Column:
-    from angelone_clickhouse_spark.streaming.keyed_index import P_KEYED
-
     return F.pmod(F.xxhash64(F.col("gram")), F.lit(P_KEYED)).cast("int")
 
 
 def read_gram_index(
     spark: SparkSession, index_dir: str, pks: list[int] | None = None
 ) -> DataFrame:
-    from angelone_clickhouse_spark.streaming.keyed_index import read_keyed
-
     return read_keyed(spark, index_dir, GRAM_SCHEMA, pks=pks)
 
 
-def make_novelty_epoch_writer(
-    out_dir: str, index_dir: str, retention_epochs: int | None = None
-):
-    """foreachBatch body: sweep this epoch's files from both sinks
-    (retry idempotence), derive the epoch's candidate partitions from
-    its own grams, read ONLY those partitions of the keyed seen-gram
-    index, compute, commit — verdicts flat, new grams keyed."""
+def novelty_gate(
+    batch: DataFrame, index_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The scorer's epoch function: derive the epoch's candidate
+    partitions from its own grams, read ONLY those partitions of the
+    keyed seen-gram index, and return (verdicts, new grams as keyed
+    index rows)."""
+    from angelone_clickhouse_spark.operators.pipeline import _word_ngrams
 
-    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
-        from angelone_clickhouse_spark.operators.pipeline import (
-            _word_ngrams,
-        )
-        from angelone_clickhouse_spark.streaming.keyed_index import (
-            PART_COL,
-            checkpoint_with_pks,
-            commit_epoch_fused,
-            sweep_epoch_keyed,
-        )
-
-        spark = batch.sparkSession
-        sweep_prefix(out_dir, f"e{epoch_id}-")
-        sweep_epoch_keyed(index_dir, epoch_id)
-        if retention_epochs is not None:
-            # expire BEFORE reading, not after committing: a retried
-            # epoch must see the exact index state the first attempt
-            # saw (expiry is idempotent; post-commit expiry would
-            # shrink the gating set between attempts and break the
-            # bit-deterministic recomputation contract)
-            from angelone_clickhouse_spark.streaming.keyed_index import (
-                expire_epochs_keyed,
-            )
-
-            expire_epochs_keyed(index_dir, epoch_id - retention_epochs)
-        # one gram pass per epoch: the checkpointed exploded-gram
-        # frame feeds the partition collect AND the epoch body. r16:
-        # the pk-occupancy bitmap rides the checkpoint job as
-        # observed metrics — one driver round-trip per epoch instead
-        # of the checkpoint + distinct().collect() pair.
-        dg, pks = checkpoint_with_pks(
-            _word_ngrams(batch, NOVELTY_N), pk_col=_gram_pk()
-        )
-        index = read_gram_index(spark, index_dir, pks=pks)
-        verdicts, new_grams = novelty_epoch(batch, index, dg=dg)
-        # no checkpoints needed any more: each frame feeds exactly
-        # one branch of the single fused staging job (the two eager
-        # checkpoints existed to keep the two commit JOBS from
-        # recomputing the epoch — the fused commit is one job)
-        commit_epoch_fused(
-            verdicts,
-            out_dir,
-            new_grams.withColumn(PART_COL, _gram_pk()),
-            index_dir,
-            epoch_id,
-        )
-
-
-    return write_epoch
-
-
-def novelty_docs_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    out_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    timeout_s: int = 600,
-) -> None:
-    """Run the scorer over a document file stream to completion
-    (availableNow, one file per trigger = one epoch, mtime order)."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
+    # one gram pass per epoch: the checkpointed exploded-gram frame
+    # feeds the partition set AND the epoch body; its pk-occupancy
+    # bitmap rides the checkpoint job as observed metrics. The verdicts
+    # need no checkpoint: each frame feeds exactly one sink of the
+    # single commit job.
+    dg, pks = checkpoint_with_pks(
+        _word_ngrams(batch, NOVELTY_N), pk_col=_gram_pk()
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            make_novelty_epoch_writer(out_dir, index_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q, timeout_s, "novelty_docs_stream")
-
-
-# replay layout shared with stream_dedup_docs (same splitter); built
-# once per sf_dir — harness setup, not operator work
-_REPLAY_CACHE: dict[str, str] = {}
+    index = read_gram_index(batch.sparkSession, index_dir, pks=pks)
+    verdicts, new_grams = novelty_epoch(batch, index, dg=dg)
+    return verdicts, new_grams.withColumn(PART_COL, _gram_pk())
 
 
 def stream_novelty_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible face: replay the documents table in
     N_STREAM_EPOCHS epochs through the seen-gram index scorer and
     return every epoch's per-doc verdicts."""
-    docs_dir = _REPLAY_CACHE.get(sf_dir)
-    if docs_dir is None:
-        docs_dir = os.path.join(
-            owned_tmpdir(prefix="stream_novelty_"), "in"
-        )
-        write_epoch_replay(spark, sf_dir, docs_dir)
-        _REPLAY_CACHE[sf_dir] = docs_dir
-    work = owned_tmpdir(prefix="stream_novelty_run_")
-    out_dir = os.path.join(work, "verdicts")
-    index_dir = os.path.join(work, "index")
-    novelty_docs_stream(
-        spark, docs_dir, out_dir, index_dir, os.path.join(work, "ckpt")
+    out_dir, _ = replay_gate(
+        spark, sf_dir, "documents", "stream_novelty", novelty_gate
     )
     return spark.read.schema(VERDICT_SCHEMA).parquet(out_dir)
 

@@ -21,13 +21,13 @@ the batch op's DuckDB oracle checks this path verbatim: a green row
 certifies the merge law end-to-end (stream == batch is the test, the
 oracle makes it a driver-checked fact).
 
-Crash/retry contract: each epoch's partial is an ``e{epoch}-``
-prefixed flat parquet append (epoch_commit.py) — a retried epoch
-sweeps its own files first, and the partial is a pure function of the
-batch, so recomputation is bit-deterministic. No keyed layout needed:
-the store is D x W-bounded per epoch (KB-scale), and the merge read
-is one scan of tiny files — compaction (streaming/compaction.py)
-applies if epoch count ever grows the file count, not the data size.
+Each epoch's partial is one flat sink of the shared committer
+(epoch_commit.py, which states the retry contract); the partial is a
+pure function of the batch, so a retried epoch recomputes
+bit-identically. No keyed layout is needed: the store is D x W-bounded
+per epoch (KB-scale), and the merge read is one scan of tiny files —
+compaction (streaming/compaction.py) applies if epoch count ever grows
+the file count, not the data size.
 
 Scale notes (100 TB): per epoch ONE groupBy(d, bucket) with map-side
 partials over the trigger's tokens — constant output size; the merge
@@ -38,41 +38,23 @@ deployment queries the cell table directly.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from angelone_clickhouse_spark.streaming.workdirs import owned_tmpdir
 from angelone_clickhouse_spark.functions.scalar import (
     cms_cells,
     cms_probe_topk,
 )
-from angelone_clickhouse_spark.streaming.docdedup import (
-    DOCS_SCHEMA,
-    write_epoch_replay,
-)
-from angelone_clickhouse_spark.streaming.epoch_commit import (
-    await_or_raise,
-    commit_epoch_flat,
-    sweep_prefix,
-)
+from angelone_clickhouse_spark.streaming.epoch_commit import replay_gate
 
 CELLS_SCHEMA = "d int, bucket long, n long"
 
 
-def make_cms_epoch_writer(cells_dir: str):
-    """foreachBatch body: sweep this epoch's partial (retry
-    idempotence), aggregate the batch's cells, commit."""
-
-    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
-        sweep_prefix(cells_dir, f"e{epoch_id}-")
-        part = cms_cells(
-            batch.select(F.explode(F.split("text", " ")).alias("token"))
-        )
-        commit_epoch_flat(part, cells_dir, epoch_id)
-
-    return write_epoch
+def cms_epoch(batch: DataFrame, cells_dir: str) -> tuple[DataFrame]:
+    """The sketch's epoch function: the batch's cell partial."""
+    return (
+        cms_cells(batch.select(F.explode(F.split("text", " ")).alias("token"))),
+    )
 
 
 def merged_cells(spark: SparkSession, cells_dir: str) -> DataFrame:
@@ -87,9 +69,6 @@ def merged_cells(spark: SparkSession, cells_dir: str) -> DataFrame:
     )
 
 
-_REPLAY_CACHE: dict[str, str] = {}
-
-
 def stream_token_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible face: stream the documents replay through the
     per-epoch sketch writer, merge the partials, and answer the batch
@@ -97,31 +76,9 @@ def stream_token_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     op's, verbatim, because cell sums commute."""
     from angelone_clickhouse_spark.sources.tables import load_table
 
-    docs_dir = _REPLAY_CACHE.get(sf_dir)
-    if docs_dir is None:
-        docs_dir = os.path.join(
-            owned_tmpdir(prefix="stream_cms_"), "in"
-        )
-        write_epoch_replay(spark, sf_dir, docs_dir)
-        _REPLAY_CACHE[sf_dir] = docs_dir
-    work = owned_tmpdir(prefix="stream_cms_run_")
-    cells_dir = os.path.join(work, "cells")
-    os.makedirs(cells_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
+    (cells_dir,) = replay_gate(
+        spark, sf_dir, "documents", "stream_cms", cms_epoch, sinks=("cells",)
     )
-    q = (
-        stream.writeStream.foreachBatch(make_cms_epoch_writer(cells_dir))
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # proceeding while the query still runs would merge a partially
-    # written cells store and silently understate every estimate
-    # (ADVICE r12; the shared guard is applied to every runner)
-    await_or_raise(q, 600, "stream_token_cms")
     toks = load_table(spark, sf_dir, "documents").select(
         F.explode(F.split("text", " ")).alias("token")
     )

@@ -4,9 +4,9 @@ Every epoch-replay op (stream_dedup_docs, stream_novelty_docs,
 stream_semdedup[_lsh], stream_token_cms) needs two kinds of scratch:
 
 * a REPLAY input dir (the documents/embeddings table split into
-  ``N_STREAM_EPOCHS`` files) — cached per (op, sf_dir) because it is
-  a pure function of the fixture and re-splitting it per invocation
-  would dominate the bench; and
+  ``N_STREAM_EPOCHS`` files) — cached per (sf_dir, table) because it
+  is a pure function of the fixture and re-splitting it per
+  invocation would dominate the bench; and
 * a PER-RUN work dir (epoch-committed store + checkpoint) — fresh
   per invocation because the replay must start from an empty store.
 
@@ -14,8 +14,7 @@ Neither can be deleted when the op returns: the result DataFrame
 reads the store LAZILY, so the caller's ``collect()`` happens after
 the op function exits. Deleting eagerly would break every consumer;
 never deleting leaks one dir per invocation for the life of the
-process (ADVICE r12 on sketch.py — the same pattern existed in all
-four modules). The resolution is process-exit ownership: every dir
+process. The resolution is process-exit ownership: every dir
 handed out here is registered once with ``atexit`` and removed when
 the Python process ends — bounded lifetime, zero interference with
 lazy evaluation, and retried/concurrent runs never share a per-run

@@ -36,7 +36,6 @@ import glob
 import json
 import os
 import re
-import shutil
 import statistics
 import sys
 import tempfile
@@ -358,77 +357,6 @@ def main() -> None:
     except Exception as e:  # noqa: BLE001 — diagnostics, not the gate
         ann_index["error"] = f"{type(e).__name__}: {e}"
 
-    # Bulk epoch-commit arm (VERDICT r13 #6): the replay gates exercise
-    # only the trigger-bounded fused path; this measures
-    # commit_epoch_fused(bulk=True) against the OLD two-job commit
-    # (commit_epoch_flat + a partitionBy staging write +
-    # commit_epoch_partitioned) on a BULK epoch — ~|events| flat rows
-    # plus one keyed replica row per event — so the staging-parallelism
-    # claim is a datapoint, not an assertion. The payload frames are
-    # checkpointed once; only the commit paths are timed.
-    keyed_commit: dict[str, float] = {}
-    try:
-        from angelone_clickhouse_spark.streaming.epoch_commit import (
-            commit_epoch_flat,
-            commit_epoch_partitioned,
-        )
-        from angelone_clickhouse_spark.streaming.keyed_index import (
-            PART_COL,
-            commit_epoch_fused,
-            pk_of,
-        )
-
-        ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
-            "event_id", "user_id", "value"
-        )
-        flat_df = ev.select(
-            "event_id", (F.col("value") > 0).alias("keep")
-        ).localCheckpoint(eager=True)
-        keyed_df = ev.select(
-            F.col("event_id").alias("key_id"),
-            F.xxhash64("user_id").alias("h"),
-            "value",
-        ).withColumn(PART_COL, pk_of(F.col("h"))).localCheckpoint(
-            eager=True
-        )
-
-        def _two_job(flat_dir: str, keyed_dir: str, e: int) -> None:
-            commit_epoch_flat(
-                flat_df, flat_dir, e, max_records_per_file=50_000
-            )
-            staging = os.path.join(keyed_dir + ".stage", f"epoch-{e}")
-            shutil.rmtree(staging, ignore_errors=True)
-            keyed_df.repartition(F.col(PART_COL)).write.mode(
-                "overwrite"
-            ).partitionBy(PART_COL).parquet(staging)
-            commit_epoch_partitioned(
-                staging, keyed_dir, e, partition_prefix=f"{PART_COL}="
-            )
-            shutil.rmtree(keyed_dir + ".stage", ignore_errors=True)
-
-        def _fused_bulk(flat_dir: str, keyed_dir: str, e: int) -> None:
-            commit_epoch_fused(
-                flat_df, flat_dir, keyed_df, keyed_dir, e, bulk=True
-            )
-
-        with tempfile.TemporaryDirectory() as d:
-            for label, fn in (
-                ("two_job", _two_job),
-                ("fused_bulk", _fused_bulk),
-            ):
-                runs = []
-                for i in range(max(RUNS, 2)):
-                    t0 = time.time()
-                    fn(
-                        os.path.join(d, f"{label}_flat"),
-                        os.path.join(d, f"{label}_keyed"),
-                        i,
-                    )
-                    runs.append(time.time() - t0)
-                keyed_commit[label] = round(statistics.median(runs), 3)
-    except Exception as e:  # noqa: BLE001 — diagnostics, not the gate
-        keyed_commit["error"] = f"{type(e).__name__}: {e}"
-
     total = round(sum(timings.values()), 3)
     canary_median = round(statistics.median(canary_runs), 3)
     full = {
@@ -454,9 +382,6 @@ def main() -> None:
         # ANN index lifecycle, build and warm probe timed separately
         # (the per-query medians above conflate them at bench_runs=1)
         "ann_index_secs": ann_index,
-        # bulk epoch commit: fused single-job staging vs the old
-        # two-job path on a ~|events|-row epoch (VERDICT r13 #6)
-        "keyed_commit_secs": keyed_commit,
         # noise canary (see _canary above): canary_runs / the median
         # keep the edge-only cadence (1 warm point + 1 per pass) so
         # cross-round ratios compare like with like; the mid-pass

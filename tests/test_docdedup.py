@@ -12,12 +12,20 @@ from pyspark.sql import functions as F
 from angelone_clickhouse_spark.streaming.docdedup import (
     N_STREAM_EPOCHS,
     SIG_SCHEMA,
-    dedup_docs_stream,
+    dedup_docs_gate,
     dedup_epoch,
-    make_docdedup_epoch_writer,
     read_sig_index,
-    write_epoch_replay,
 )
+from angelone_clickhouse_spark.streaming.epoch_commit import (
+    make_epoch_writer,
+    run_epochs,
+    write_replay,
+)
+
+
+def dedup_docs_stream(spark, docs_dir, out_dir, index_dir, ckpt):
+    writer = make_epoch_writer(dedup_docs_gate, out_dir, index_dir)
+    run_epochs(spark, "documents", docs_dir, writer, ckpt)
 
 
 def _rows(df):
@@ -54,7 +62,7 @@ def _sequential_replica(spark, sf_dir):
 
 def test_stream_equals_sequential_batch(spark, sf_dir, tmp_path):
     docs_dir = str(tmp_path / "in")
-    write_epoch_replay(spark, sf_dir, docs_dir)
+    write_replay(spark, sf_dir, "documents", docs_dir)
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
     dedup_docs_stream(
         spark, docs_dir, out_dir, index_dir, str(tmp_path / "ckpt")
@@ -79,10 +87,10 @@ def test_epoch_retry_is_idempotent(spark, sf_dir, tmp_path):
     own files, not append duplicates — including the index, whose
     partial append would otherwise poison the NEXT epoch's matches."""
     docs_dir = str(tmp_path / "in")
-    write_epoch_replay(spark, sf_dir, docs_dir)
+    write_replay(spark, sf_dir, "documents", docs_dir)
     files = sorted(os.listdir(docs_dir))
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
-    writer = make_docdedup_epoch_writer(out_dir, index_dir)
+    writer = make_epoch_writer(dedup_docs_gate, out_dir, index_dir)
 
     def batch_of(name):
         return spark.read.parquet(os.path.join(docs_dir, name))
@@ -106,7 +114,7 @@ def test_restart_resumes_from_checkpoint(spark, sf_dir, tmp_path):
     add the rest and re-run with the same checkpoint: the final state
     must equal a single uninterrupted run."""
     full_dir = str(tmp_path / "all")
-    write_epoch_replay(spark, sf_dir, full_dir)
+    write_replay(spark, sf_dir, "documents", full_dir)
     files = sorted(os.listdir(full_dir))
     docs_dir = str(tmp_path / "in")
     os.makedirs(docs_dir)

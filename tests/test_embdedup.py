@@ -10,19 +10,25 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from angelone_clickhouse_spark.streaming.docdedup import (
-    N_STREAM_EPOCHS,
-    _read_index,
-)
 from angelone_clickhouse_spark.streaming.embdedup import (
     EMB_SCHEMA,
     INDEX_SCHEMA,
     VERDICT_SCHEMA,
-    make_embdedup_epoch_writer,
+    read_vec_index,
     semdedup_epoch,
-    semdedup_stream,
-    write_emb_epoch_replay,
+    semdedup_gate,
 )
+from angelone_clickhouse_spark.streaming.epoch_commit import (
+    N_STREAM_EPOCHS,
+    make_epoch_writer,
+    run_epochs,
+    write_replay,
+)
+
+
+def semdedup_stream(spark, emb_dir, out_dir, index_dir, ckpt):
+    writer = make_epoch_writer(semdedup_gate, out_dir, index_dir)
+    run_epochs(spark, "embeddings", emb_dir, writer, ckpt)
 
 
 def _rows(df):
@@ -39,7 +45,7 @@ def _verdicts(spark, out_dir):
 def _index_rows(spark, index_dir):
     return {
         (r.vec_id, tuple(r.v))
-        for r in _read_index(spark, index_dir, INDEX_SCHEMA).collect()
+        for r in read_vec_index(spark, index_dir).collect()
     }
 
 
@@ -64,7 +70,7 @@ def _sequential_replica(spark, sf_dir):
 
 def test_stream_equals_sequential_batch(spark, sf_dir, tmp_path):
     emb_dir = str(tmp_path / "in")
-    write_emb_epoch_replay(spark, sf_dir, emb_dir)
+    write_replay(spark, sf_dir, "embeddings", emb_dir)
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
     semdedup_stream(
         spark, emb_dir, out_dir, index_dir, str(tmp_path / "ckpt")
@@ -87,10 +93,10 @@ def test_epoch_retry_is_idempotent(spark, sf_dir, tmp_path):
     replace its own files, not append duplicates — including the
     index, whose partial append would poison the NEXT epoch."""
     emb_dir = str(tmp_path / "in")
-    write_emb_epoch_replay(spark, sf_dir, emb_dir)
+    write_replay(spark, sf_dir, "embeddings", emb_dir)
     files = sorted(os.listdir(emb_dir))
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
-    writer = make_embdedup_epoch_writer(out_dir, index_dir)
+    writer = make_epoch_writer(semdedup_gate, out_dir, index_dir)
 
     def batch_of(name):
         return spark.read.schema(EMB_SCHEMA).parquet(
@@ -113,7 +119,7 @@ def test_restart_resumes_from_checkpoint(spark, sf_dir, tmp_path):
     """Stop after the first two epochs, add the rest, re-run with the
     same checkpoint: final state equals one uninterrupted run."""
     full_dir = str(tmp_path / "all")
-    write_emb_epoch_replay(spark, sf_dir, full_dir)
+    write_replay(spark, sf_dir, "embeddings", full_dir)
     files = sorted(os.listdir(full_dir))
     emb_dir = str(tmp_path / "in")
     os.makedirs(emb_dir)
@@ -165,18 +171,35 @@ def test_planted_duplicates_gated(spark):
 
 # --- LSH-fronted twin (stream_semdedup_lsh) --------------------------
 
+from functools import partial  # noqa: E402
+
 from angelone_clickhouse_spark.streaming.embdedup import (  # noqa: E402
     INDEX_LSH_SCHEMA,
     _lsh_candidates,
     _probe_keys,
     _with_cells,
-    make_embdedup_lsh_epoch_writer,
     read_lsh_index,
     semdedup_lsh_epoch,
-    semdedup_lsh_stream,
+    semdedup_lsh_gate,
 )
 
 _LSH = dict(planes=7, n_tables=4, n_flips=2)
+
+
+def semdedup_lsh_stream(spark, emb_dir, out_dir, index_dir, ckpt, planes):
+    from angelone_clickhouse_spark.operators.embedding_fast import (
+        KNN_ANN_FLIPS,
+        KNN_ANN_TABLES,
+    )
+
+    gate = partial(
+        semdedup_lsh_gate,
+        planes=planes,
+        n_tables=KNN_ANN_TABLES,
+        n_flips=KNN_ANN_FLIPS,
+    )
+    writer = make_epoch_writer(gate, out_dir, index_dir)
+    run_epochs(spark, "embeddings", emb_dir, writer, ckpt)
 
 
 def _lsh_sequential_replica(spark, sf_dir):
@@ -214,7 +237,7 @@ def test_lsh_stream_equals_sequential_batch(spark, sf_dir, tmp_path):
     from angelone_clickhouse_spark.sources.tables import load_table
 
     emb_dir = str(tmp_path / "in")
-    write_emb_epoch_replay(spark, sf_dir, emb_dir)
+    write_replay(spark, sf_dir, "embeddings", emb_dir)
     planes = _adaptive_planes(load_table(spark, sf_dir, "embeddings").count())
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
     semdedup_lsh_stream(
@@ -256,11 +279,11 @@ def test_lsh_gate_is_superset_filtered_exact_gate(spark, sf_dir):
 
 def test_lsh_epoch_retry_is_idempotent(spark, sf_dir, tmp_path):
     emb_dir = str(tmp_path / "in")
-    write_emb_epoch_replay(spark, sf_dir, emb_dir)
+    write_replay(spark, sf_dir, "embeddings", emb_dir)
     files = sorted(os.listdir(emb_dir))
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
-    writer = make_embdedup_lsh_epoch_writer(
-        out_dir, index_dir, **_LSH
+    writer = make_epoch_writer(
+        partial(semdedup_lsh_gate, **_LSH), out_dir, index_dir
     )
 
     def batch_of(name):
@@ -293,7 +316,7 @@ def test_lsh_restart_resumes_from_checkpoint(spark, sf_dir, tmp_path):
     from angelone_clickhouse_spark.sources.tables import load_table
 
     full_dir = str(tmp_path / "all")
-    write_emb_epoch_replay(spark, sf_dir, full_dir)
+    write_replay(spark, sf_dir, "embeddings", full_dir)
     planes = _adaptive_planes(load_table(spark, sf_dir, "embeddings").count())
     files = sorted(os.listdir(full_dir))
     emb_dir = str(tmp_path / "in")

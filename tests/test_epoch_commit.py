@@ -1,14 +1,14 @@
 """Direct unit tests of the shared epoch committer
 (streaming/epoch_commit.py) — the at-least-once contract tested on
-the module itself, not just through the docdedup/novelty/ingest
-pipelines that import it."""
+the module itself, not just through the gates and the ingest sink
+that use it."""
 
 from __future__ import annotations
 
 import os
 
 from angelone_clickhouse_spark.streaming.epoch_commit import (
-    commit_epoch_flat,
+    commit_epoch,
     commit_epoch_partitioned,
     epoch_prefix,
     sweep_prefix,
@@ -25,15 +25,15 @@ def _flat_rows(spark, d):
 def test_flat_commit_retry_replaces_not_appends(spark, tmp_path):
     out = str(tmp_path / "ds")
     df0 = spark.createDataFrame([(1,), (2,)], "x long")
-    commit_epoch_flat(df0, out, 0)
+    commit_epoch(0, [(df0, out)])
     assert _flat_rows(spark, out) == [1, 2]
     # the retry recomputes (possibly different content) — it must
     # REPLACE epoch 0's files, never append beside them
     df0b = spark.createDataFrame([(1,), (2,), (3,)], "x long")
-    commit_epoch_flat(df0b, out, 0)
+    commit_epoch(0, [(df0b, out)])
     assert _flat_rows(spark, out) == [1, 2, 3]
     # a second epoch coexists under its own prefix
-    commit_epoch_flat(spark.createDataFrame([(9,)], "x long"), out, 1)
+    commit_epoch(1, [(spark.createDataFrame([(9,)], "x long"), out)])
     assert _flat_rows(spark, out) == [1, 2, 3, 9]
     names = os.listdir(out)
     assert sum(n.startswith(epoch_prefix(0)) for n in names) == 1
@@ -42,8 +42,8 @@ def test_flat_commit_retry_replaces_not_appends(spark, tmp_path):
 
 def test_flat_sweep_only_touches_its_epoch(spark, tmp_path):
     out = str(tmp_path / "ds")
-    commit_epoch_flat(spark.createDataFrame([(1,)], "x long"), out, 0)
-    commit_epoch_flat(spark.createDataFrame([(2,)], "x long"), out, 1)
+    commit_epoch(0, [(spark.createDataFrame([(1,)], "x long"), out)])
+    commit_epoch(1, [(spark.createDataFrame([(2,)], "x long"), out)])
     # e1- must not be swept by the e10- prefix or by e0's retry
     sweep_prefix(out, epoch_prefix(10))
     sweep_prefix(out, epoch_prefix(0))
@@ -106,28 +106,65 @@ def test_partitioned_sweep_ignores_foreign_dirs(spark, tmp_path):
     assert not any(n.startswith("e0-") for n in os.listdir(day))
 
 
-def test_flat_commit_max_records_splits_files(spark, tmp_path):
-    """The bulk-sink escape hatch (VERDICT r10 #8): a forced
-    multi-file epoch stages, commits every part file under the epoch
-    prefix, reads back identically, and a retry still replaces the
-    whole epoch."""
-    out = str(tmp_path / "sink")
-    df = spark.range(100).selectExpr("id AS k", "id * 2 AS v")
-    commit_epoch_flat(df, out, 7, max_records_per_file=10)
-    files = [n for n in os.listdir(out) if n.endswith(".parquet")]
-    assert len(files) >= 10
-    assert all(n.startswith("e7-") for n in files)
-    got = {(r.k, r.v) for r in spark.read.parquet(out).collect()}
-    assert got == {(i, 2 * i) for i in range(100)}
-    # retry with different contents must fully replace, not merge
-    commit_epoch_flat(
-        spark.range(5).selectExpr("id AS k", "id AS v"),
-        out,
-        7,
-        max_records_per_file=2,
+def test_commit_retry_replaces_every_sink(spark, tmp_path):
+    """A retry with DIFFERENT contents fully replaces the epoch in
+    every sink, flat and keyed, and leaves other epochs alone."""
+    from angelone_clickhouse_spark.streaming.keyed_index import (
+        PART_COL,
+        pk_of,
+        read_keyed,
     )
-    got = {(r.k, r.v) for r in spark.read.parquet(out).collect()}
-    assert got == {(i, i) for i in range(5)}
+
+    flat, keyed = str(tmp_path / "flat"), str(tmp_path / "keyed")
+
+    def sinks(n):
+        df = spark.range(n).selectExpr("id AS k", "id * 2 AS v")
+        return [(df, flat), (df.withColumn(PART_COL, pk_of("k")), keyed)]
+
+    commit_epoch(7, sinks(100))
+    commit_epoch(8, [(spark.range(1).selectExpr("-1 AS k", "0 AS v"), flat)])
+    commit_epoch(7, sinks(5))
+    got = {(r.k, r.v) for r in spark.read.schema("k long, v long").parquet(flat).collect()}
+    assert got == {(i, 2 * i) for i in range(5)} | {(-1, 0)}
+    got = {(r.k, r.v) for r in read_keyed(spark, keyed, "k long, v long").collect()}
+    assert got == {(i, 2 * i) for i in range(5)}
+
+
+def test_commit_empty_sink_keeps_dir_without_file(spark, tmp_path):
+    """A sink with zero rows this epoch gets no epoch file, but its
+    directory exists (readers scan the whole directory)."""
+    out, other = str(tmp_path / "empty"), str(tmp_path / "other")
+    commit_epoch(
+        0,
+        [
+            (spark.createDataFrame([], "x long"), out),
+            (spark.createDataFrame([(1,)], "x long"), other),
+        ],
+    )
+    assert os.path.isdir(out) and os.listdir(out) == []
+    assert spark.read.schema("x long").parquet(out).count() == 0
+    assert _flat_rows(spark, other) == [1]
+
+
+def test_commit_cleans_only_its_own_staging(spark, tmp_path):
+    """The commit removes its own epoch-<id> staging dir and nothing
+    else under any sink's .stage root (flat compaction journals there)."""
+    from angelone_clickhouse_spark.streaming.keyed_index import PART_COL
+
+    flat, keyed = str(tmp_path / "flat"), str(tmp_path / "keyed")
+    markers = []
+    for d in (flat, keyed):
+        os.makedirs(d + ".stage")
+        markers.append(os.path.join(d + ".stage", "foreign"))
+        with open(markers[-1], "w") as f:
+            f.write("keep")
+    df = spark.createDataFrame([(1,), (2,)], "x long")
+    commit_epoch(
+        3, [(df, flat), (df.withColumn(PART_COL, df.x.cast("int")), keyed)]
+    )
+    assert all(os.path.exists(m) for m in markers)
+    assert os.listdir(flat + ".stage") == ["foreign"]
+    assert _flat_rows(spark, flat) == [1, 2]
 
 
 def test_flat_sink_compaction_soak_bounded_files(spark, tmp_path):
@@ -147,8 +184,8 @@ def test_flat_sink_compaction_soak_bounded_files(spark, tmp_path):
         df = spark.createDataFrame(
             [(e, i) for i in range(3)], "epoch int, i int"
         )
-        commit_epoch_flat(df, out, e)
-        commit_epoch_flat(df, plain, e)
+        commit_epoch(e, [(df, out)])
+        commit_epoch(e, [(df, plain)])
         if e % 5 == 4:
             stats = compact_flat_epoch_sink(spark, out, keep_recent=1)
             assert stats is not None
@@ -184,9 +221,7 @@ def test_flat_compaction_crash_recovery(spark, tmp_path):
 
     out = str(tmp_path / "sink")
     for e in range(3):
-        commit_epoch_flat(
-            spark.createDataFrame([(e,)], "epoch int"), out, e
-        )
+        commit_epoch(e, [(spark.createDataFrame([(e,)], "epoch int"), out)])
     victims = [
         n
         for n in os.listdir(out)

@@ -7,6 +7,7 @@ by test_docdedup.py / test_embdedup.py over the same writers."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +17,10 @@ from angelone_clickhouse_spark.plantree import (
     scan_ancestors,
 )
 from angelone_clickhouse_spark.sources.tables import load_table
+from angelone_clickhouse_spark.streaming.epoch_commit import (
+    commit_epoch,
+    make_epoch_writer,
+)
 from angelone_clickhouse_spark.streaming.keyed_index import (
     P_KEYED,
     collect_pks,
@@ -33,13 +38,11 @@ def lsh_store(spark, sf_dir, tmp_path):
     """A keyed LSH survivor index built from two replay epochs, plus
     a tiny (2-vector) third batch — small enough that its probe keys
     hash into a strict subset of the partitions."""
-    from angelone_clickhouse_spark.streaming.embdedup import (
-        make_embdedup_lsh_epoch_writer,
-    )
+    from angelone_clickhouse_spark.streaming.embdedup import semdedup_lsh_gate
 
     emb = load_table(spark, sf_dir, "embeddings")
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
-    w = make_embdedup_lsh_epoch_writer(out_dir, index_dir, **_LSH)
+    w = make_epoch_writer(partial(semdedup_lsh_gate, **_LSH), out_dir, index_dir)
     w(emb.filter(F.col("vec_id") % 4 == 0), 0)
     w(emb.filter(F.col("vec_id") % 4 == 1), 1)
     tiny = emb.filter(F.col("vec_id").isin([2, 6]))
@@ -168,13 +171,11 @@ def test_lsh_epoch_read_bound_is_pruned_bytes(spark, lsh_store):
 def sig_store(spark, sf_dir, tmp_path):
     """A keyed signature index from two document replay epochs, plus
     a tiny 2-doc batch."""
-    from angelone_clickhouse_spark.streaming.docdedup import (
-        make_docdedup_epoch_writer,
-    )
+    from angelone_clickhouse_spark.streaming.docdedup import dedup_docs_gate
 
     docs = load_table(spark, sf_dir, "documents")
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
-    w = make_docdedup_epoch_writer(out_dir, index_dir)
+    w = make_epoch_writer(dedup_docs_gate, out_dir, index_dir)
     w(docs.filter(F.col("doc_id") % 4 == 0), 0)
     w(docs.filter(F.col("doc_id") % 4 == 1), 1)
     tiny = docs.filter(F.col("doc_id").isin([2, 6]))
@@ -258,16 +259,16 @@ def test_lsh_retention_expires_old_survivors(spark, tmp_path):
     duplicate of a retained survivor is still gated."""
     from angelone_clickhouse_spark.streaming.embdedup import (
         EMB_SCHEMA,
-        make_embdedup_lsh_epoch_writer,
         read_lsh_index,
+        semdedup_lsh_gate,
     )
 
     dim = 64
     e1 = [1.0] + [0.0] * (dim - 1)
     e2 = [0.0, 1.0] + [0.0] * (dim - 2)
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
-    w = make_embdedup_lsh_epoch_writer(
-        out_dir, index_dir, retention_epochs=1, **_LSH
+    w = make_epoch_writer(
+        partial(semdedup_lsh_gate, **_LSH), out_dir, index_dir, retention_epochs=1
     )
     mk = lambda rows: spark.createDataFrame(rows, EMB_SCHEMA)  # noqa: E731
     w(mk([(0, e1, 0)]), 0)
@@ -306,7 +307,7 @@ def test_doc_retention_expires_old_survivors(spark, tmp_path):
     survivor's exact copy arriving after the window is kept."""
     from angelone_clickhouse_spark.streaming.docdedup import (
         DOCS_SCHEMA,
-        make_docdedup_epoch_writer,
+        dedup_docs_gate,
         read_sig_index,
     )
 
@@ -316,7 +317,9 @@ def test_doc_retention_expires_old_survivors(spark, tmp_path):
         [(i, t, "en", "t", len(t)) for i, t in rows], DOCS_SCHEMA
     )
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
-    w = make_docdedup_epoch_writer(out_dir, index_dir, retention_epochs=1)
+    w = make_epoch_writer(
+        dedup_docs_gate, out_dir, index_dir, retention_epochs=1
+    )
     w(mk([(0, text_a)]), 0)
     w(mk([(10, text_b)]), 1)
     w(mk([(20, text_a), (21, text_b)]), 2)
@@ -340,7 +343,7 @@ def test_novelty_retention_forgets_old_grams(spark, tmp_path):
     """retention_epochs wiring on the novelty scorer: grams seen only
     before the window count as novel again."""
     from angelone_clickhouse_spark.streaming.novelty import (
-        make_novelty_epoch_writer,
+        novelty_gate,
         read_gram_index,
     )
 
@@ -351,7 +354,9 @@ def test_novelty_retention_forgets_old_grams(spark, tmp_path):
         [(i, t, "en", "t", len(t)) for i, t in rows], DOCS
     )
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
-    w = make_novelty_epoch_writer(out_dir, index_dir, retention_epochs=1)
+    w = make_epoch_writer(
+        novelty_gate, out_dir, index_dir, retention_epochs=1
+    )
     w(mk([(0, text_a)]), 0)
     w(mk([(10, text_b)]), 1)
     w(mk([(20, text_a)]), 2)  # grams of epoch 0, now expired
@@ -379,17 +384,14 @@ def test_novelty_retention_forgets_old_grams(spark, tmp_path):
     assert leftover == []
 
 
-def test_commit_epoch_fused_two_sinks_one_job(spark, tmp_path):
-    """commit_epoch_fused (r13, VERDICT r12 #3): one staging job must
-    land BOTH sinks exactly as the two-commit path did — flat rows
+def test_commit_epoch_two_sinks_one_job(spark, tmp_path):
+    """commit_epoch with a flat and a keyed sink: one staging job must
+    land BOTH sinks exactly as two separate commits would — flat rows
     under the epoch prefix, keyed rows in their pk partitions, the
     superset union's null-padded foreign columns invisible to each
     sink's explicit-schema reader, an empty keyed side handled, and a
     crashed attempt's files swept on retry."""
-    from angelone_clickhouse_spark.streaming.keyed_index import (
-        PART_COL,
-        commit_epoch_fused,
-    )
+    from angelone_clickhouse_spark.streaming.keyed_index import PART_COL
 
     flat_dir, keyed_dir = str(tmp_path / "flat"), str(tmp_path / "keyed")
     flat = spark.createDataFrame(
@@ -398,7 +400,7 @@ def test_commit_epoch_fused_two_sinks_one_job(spark, tmp_path):
     keyed = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 11)], "doc_id long, tag string, h long"
     ).withColumn(PART_COL, pk_of(F.col("h")))
-    commit_epoch_fused(flat, flat_dir, keyed, keyed_dir, 0)
+    commit_epoch(0, [(flat, flat_dir), (keyed, keyed_dir)])
     # flat sink: epoch-prefixed file, explicit-schema read sees ONLY
     # the flat columns
     files = os.listdir(flat_dir)
@@ -426,7 +428,7 @@ def test_commit_epoch_fused_two_sinks_one_job(spark, tmp_path):
             for f in os.listdir(os.path.join(keyed_dir, d))
         )
     # retry: re-committing the same epoch replaces, never duplicates
-    commit_epoch_fused(flat, flat_dir, keyed, keyed_dir, 0)
+    commit_epoch(0, [(flat, flat_dir), (keyed, keyed_dir)])
     assert (
         spark.read.schema("doc_id long, keep boolean")
         .parquet(flat_dir)
@@ -439,12 +441,17 @@ def test_commit_epoch_fused_two_sinks_one_job(spark, tmp_path):
         == 2
     )
     # empty keyed side: flat still commits, keyed store untouched
-    commit_epoch_fused(
-        spark.createDataFrame([(3, True)], "doc_id long, keep boolean"),
-        flat_dir,
-        keyed.limit(0),
-        keyed_dir,
+    commit_epoch(
         1,
+        [
+            (
+                spark.createDataFrame(
+                    [(3, True)], "doc_id long, keep boolean"
+                ),
+                flat_dir,
+            ),
+            (keyed.limit(0), keyed_dir),
+        ],
     )
     assert (
         spark.read.schema("doc_id long, keep boolean")
@@ -456,54 +463,4 @@ def test_commit_epoch_fused_two_sinks_one_job(spark, tmp_path):
         read_keyed(spark, keyed_dir, "doc_id long, tag string, h long")
         .count()
         == 2
-    )
-
-
-def test_commit_epoch_fused_bulk_shuffles_only_keyed_branch(
-    spark, tmp_path
-):
-    """The r14 bulk-branch restructure: in bulk mode only the KEYED
-    branch repartitions on pk; the flat branch keeps its natural
-    partitioning (the first cut repartitioned the whole union, which
-    shuffled the flat side the old two-job path never shuffled and
-    measured slower than two jobs). Asserted at the plan level on the
-    staged frame shape, and end-to-end on the landed data."""
-    from angelone_clickhouse_spark.streaming.keyed_index import (
-        PART_COL,
-        commit_epoch_fused,
-        pk_of,
-        read_keyed,
-    )
-
-    flat = (
-        spark.range(0, 10_000)
-        .selectExpr("id as doc_id", "id % 2 = 0 as keep")
-        .repartition(4)
-        .localCheckpoint(eager=True)
-    )
-    keyed = (
-        spark.range(0, 10_000)
-        .selectExpr("id as doc_id", "xxhash64(id) as h")
-        .withColumn(PART_COL, pk_of(F.col("h")))
-        .localCheckpoint(eager=True)
-    )
-    flat_dir, keyed_dir = str(tmp_path / "flat"), str(tmp_path / "keyed")
-    commit_epoch_fused(flat, flat_dir, keyed, keyed_dir, 0, bulk=True)
-    got_flat = spark.read.schema("doc_id long, keep boolean").parquet(
-        flat_dir
-    )
-    assert got_flat.count() == 10_000
-    # flat side landed with its NATURAL partitioning: one staged file
-    # per checkpoint partition, not one per shuffle output
-    assert len([f for f in os.listdir(flat_dir) if f.startswith("e0-")]) == 4
-    got_keyed = read_keyed(spark, keyed_dir, "doc_id long, h long")
-    assert got_keyed.count() == 10_000
-    # keyed side landed hive-partitioned with epoch-prefixed files
-    pdirs = [
-        d for d in os.listdir(keyed_dir) if d.startswith(f"{PART_COL}=")
-    ]
-    assert pdirs and all(
-        f.startswith("e0-")
-        for d in pdirs
-        for f in os.listdir(os.path.join(keyed_dir, d))
     )

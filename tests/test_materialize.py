@@ -94,3 +94,34 @@ def test_checkpoint_sized_coalesces_small_frames(spark):
     empty = spark.range(0).repartition(8)
     cke = checkpoint_sized(empty, "test empty")
     assert cke.rdd.getNumPartitions() == 1 and cke.collect() == []
+
+
+def test_observed_reads_pinned_private_chain(spark):
+    """observed() polls PySpark's private Observation._jo.getRowOrEmpty;
+    pinned on PySpark 4.1.2. On another version, re-check the chain
+    below and move the pin."""
+    import pyspark
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from angelone_clickhouse_spark.materialize import observed
+
+    assert pyspark.__version__ == "4.1.2", pyspark.__version__
+    obs = Observation()
+    spark.range(5).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+    assert obs._jo is not None
+    assert obs._jo.getRowOrEmpty().isDefined()
+    assert observed(obs) == {"n": 5}
+
+
+def test_observed_unattached_fails_clearly():
+    """An Observation never passed to DataFrame.observe has no JVM
+    handle: observed() raises at once instead of an AttributeError on
+    None or a bounded wait."""
+    import pytest
+    from pyspark.sql import Observation
+
+    from angelone_clickhouse_spark.materialize import observed
+
+    with pytest.raises(RuntimeError, match=r"obs\._jo is None"):
+        observed(Observation(), "unattached", timeout_s=0.1)

@@ -8,17 +8,23 @@ import os
 
 from pyspark.sql import functions as F
 
+from angelone_clickhouse_spark.streaming.epoch_commit import (
+    N_STREAM_EPOCHS,
+    make_epoch_writer,
+    run_epochs,
+    write_replay,
+)
 from angelone_clickhouse_spark.streaming.novelty import (
     GRAM_SCHEMA,
-    make_novelty_epoch_writer,
-    novelty_docs_stream,
     novelty_epoch,
+    novelty_gate,
     read_gram_index,
 )
-from angelone_clickhouse_spark.streaming.docdedup import (
-    N_STREAM_EPOCHS,
-    write_epoch_replay,
-)
+
+
+def novelty_docs_stream(spark, docs_dir, out_dir, index_dir, ckpt):
+    writer = make_epoch_writer(novelty_gate, out_dir, index_dir)
+    run_epochs(spark, "documents", docs_dir, writer, ckpt)
 
 
 def _rows(df):
@@ -52,7 +58,7 @@ def _sequential_replica(spark, sf_dir):
 
 def test_stream_equals_sequential_batch(spark, sf_dir, tmp_path):
     docs_dir = str(tmp_path / "in")
-    write_epoch_replay(spark, sf_dir, docs_dir)
+    write_replay(spark, sf_dir, "documents", docs_dir)
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
     novelty_docs_stream(
         spark, docs_dir, out_dir, index_dir, str(tmp_path / "ckpt")
@@ -80,10 +86,10 @@ def test_epoch_retry_is_idempotent(spark, sf_dir, tmp_path):
     only silently at the set level, but a doubled verdict file is an
     immediate row-count corruption."""
     docs_dir = str(tmp_path / "in")
-    write_epoch_replay(spark, sf_dir, docs_dir)
+    write_replay(spark, sf_dir, "documents", docs_dir)
     files = sorted(os.listdir(docs_dir))
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
-    writer = make_novelty_epoch_writer(out_dir, index_dir)
+    writer = make_epoch_writer(novelty_gate, out_dir, index_dir)
 
     def batch_of(name):
         return spark.read.parquet(os.path.join(docs_dir, name))
