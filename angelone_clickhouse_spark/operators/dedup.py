@@ -1213,7 +1213,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     full hamming distance <= 8. Oracle-checked in DuckDB (same md5
     word hash, same banding, bit_count over xor)."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = simhash_docs(docs).cache()
+    # the hash table feeds both join sides: materialize it once per call
+    # (a session cache would be matched by later calls on the plan, and
+    # so return a rewritten file's old rows)
+    sh = _checkpoint_sized(simhash_docs(docs), "simhash")
     chunks = sh.select(
         "doc_id",
         "simhash",

@@ -15,6 +15,22 @@ overridden down for local test runs):
   Parquet reader refuses by default; we read nanos as long and convert
   to a microsecond timestamp in the loader (sources/tables.py) — a
   single integer division, still fully codegen'd.
+- ``spark.sql.codegen.cache.maxEntries=CODEGEN_CACHE_ENTRIES``: the
+  JVM-wide cache of compiled whole-stage codegen classes, keyed by
+  their generated source (Spark's default holds 100). One warm pass of
+  perfbench's ``batch_ops`` operations needs 206 classes, and one pass
+  over the whole registry at sf0.001 compiles about 2,600 distinct
+  ones; a cache smaller than a pass evicts each class before its next
+  use, so every pass compiled nearly all of them again (7-9 ms each
+  on a 4-core host):
+  3,375 classes on a warm registry pass at 100 entries, 2,399 at
+  2,000, 103 at 4,096 (the queries whose generated code embeds
+  per-call literals). Memory: a cached entry holds ~9 KB of source and
+  ~3 KB of bytecode plus its loaded class; after a registry pass the
+  4,096-entry driver held 68 MB more heap and 22 MB more metaspace
+  than a 100-entry one (315 vs 247 MB heap after a full GC). The
+  conf is static: it applies when the JVM's first session is built
+  here, not to a plain session.
 - Python workers: ``spark.python.daemon.module`` points at
   ``pyworker.py``, pyspark's own daemon with one patch. Every Python
   task (the ingest decode once per epoch, every batch UDF) starts with
@@ -39,6 +55,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CODEGEN_CACHE_ENTRIES = 4096
 _ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -71,6 +88,7 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -81,3 +99,11 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Whole-stage codegen compilations this JVM has run so far (a
+    cache hit compiles nothing): the count of Spark's
+    ``CodegenMetrics.METRIC_COMPILATION_TIME`` histogram."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from angelone_clickhouse_spark import SCHEMAS
 from angelone_clickhouse_spark.materialize import (
     checkpoint_sized as _checkpoint_sized,
 )
@@ -55,7 +56,6 @@ from angelone_clickhouse_spark.operators.dedup import (
 )
 from angelone_clickhouse_spark.streaming.epoch_commit import (
     N_STREAM_EPOCHS,
-    REPLAY_TABLES,
     replay_gate,
 )
 from angelone_clickhouse_spark.streaming.keyed_index import (
@@ -65,7 +65,7 @@ from angelone_clickhouse_spark.streaming.keyed_index import (
     read_keyed,
 )
 
-DOCS_SCHEMA = REPLAY_TABLES["documents"][1]
+DOCS_SCHEMA = SCHEMAS["documents"]
 VERDICT_SCHEMA = (
     "doc_id long, dup_of_index long, dup_of_batch long, keep boolean"
 )

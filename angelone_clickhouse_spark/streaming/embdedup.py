@@ -57,10 +57,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from angelone_clickhouse_spark import SCHEMAS
 from angelone_clickhouse_spark.operators.dedup import COSINE_THRESHOLD
 from angelone_clickhouse_spark.streaming.epoch_commit import (
     N_STREAM_EPOCHS,
-    REPLAY_TABLES,
     replay_gate,
 )
 from angelone_clickhouse_spark.streaming.keyed_index import (
@@ -70,7 +70,7 @@ from angelone_clickhouse_spark.streaming.keyed_index import (
     read_keyed,
 )
 
-EMB_SCHEMA = REPLAY_TABLES["embeddings"][1]
+EMB_SCHEMA = SCHEMAS["embeddings"]
 INDEX_SCHEMA = "vec_id long, v array<double>"
 VERDICT_SCHEMA = (
     "vec_id long, dup_of_index long, dup_of_batch long, keep boolean"

@@ -62,6 +62,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from angelone_clickhouse_spark import SCHEMAS
 from angelone_clickhouse_spark.streaming.keyed_index import (
     PART_COL,
     expire_epochs_keyed,
@@ -71,14 +72,9 @@ from angelone_clickhouse_spark.streaming.workdirs import owned_tmpdir
 # registry-entry replay layout: a replayed table is split into this many
 # epoch files by <key> % N_STREAM_EPOCHS, replayed in epoch order
 N_STREAM_EPOCHS = 4
-# replayed tables: name -> (epoch key column, stream schema)
-REPLAY_TABLES = {
-    "documents": (
-        "doc_id",
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ),
-    "embeddings": ("vec_id", "vec_id long, embedding array<float>, label int"),
-}
+# replayed tables: name -> epoch key column (the stream reads the
+# table's declared schema)
+REPLAY_KEYS = {"documents": "doc_id", "embeddings": "vec_id"}
 REPLAY_TIMEOUT_S = 600
 _DEST = "_dest"
 
@@ -216,7 +212,7 @@ def write_replay(
     source replays them in epoch order."""
     from angelone_clickhouse_spark.sources.tables import load_table
 
-    key = REPLAY_TABLES[table][0]
+    key = REPLAY_KEYS[table]
     df = load_table(spark, sf_dir, table)
     os.makedirs(replay_dir, exist_ok=True)
     base = 1_000_000_000  # fixed epoch-seconds base: deterministic order
@@ -238,7 +234,7 @@ def run_epochs(
     """Run ``writer`` over the file stream in ``src_dir`` to completion:
     availableNow, one file per trigger = one epoch, mtime order."""
     q = (
-        spark.readStream.schema(REPLAY_TABLES[table][1])
+        spark.readStream.schema(SCHEMAS[table])
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
         .writeStream.foreachBatch(writer)

@@ -20,8 +20,8 @@ exactly the batch op's gram unit via the shared
   under ``NOVELTY_N`` words (no grams) — identical milli grid to the
   batch op.
 * the index grows by each epoch's distinct previously-unseen grams
-  (an anti-join keeps it a set, so index size = |distinct grams seen|,
-  not corpus size).
+  (one row per new gram, its first doc's, keeps it a set, so index
+  size = |distinct grams seen|, not corpus size).
 
 Because epochs replay in doc_id % N_STREAM_EPOCHS order rather than
 global doc_id order, the scores legitimately differ from the batch
@@ -32,11 +32,11 @@ recursion is needed; a green row proves the stream's cumulative index
 state exact.
 
 Scale notes (100 TB): gram construction is row-local and materialized
-before the explode (the Generate re-evaluation pitfall); the
-first-in-epoch table and the index probe both shuffle on gram content
-— boilerplate-gram skew is AQE's skew-join case; the index append is
-a left-anti join on the same key; the per-doc rollup shuffles on
-doc_id. The index is only ever probed by the small arriving epoch —
+before the explode (the Generate re-evaluation pitfall); the epoch's
+grams and the probed index rows share one shuffle on gram content,
+whose window yields both the first-in-epoch doc and the seen flag
+(boilerplate-gram skew lands on one window task); the per-doc rollup
+shuffles on doc_id. The index is only ever probed by the small arriving epoch —
 and since r12 it is PHYSICALLY keyed (streaming/keyed_index.py hive
 partitions on pmod(xxhash64(gram), P_KEYED)), so each epoch reads
 only the partitions its own grams hash into: per-epoch index I/O is
@@ -47,6 +47,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from angelone_clickhouse_spark.operators.mixing import NOVELTY_N
 from angelone_clickhouse_spark.streaming.epoch_commit import (
@@ -80,38 +81,47 @@ def novelty_epoch(
 
     if dg is None:
         dg = _word_ngrams(batch_docs, NOVELTY_N)
-    first = dg.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
-    seen = index_grams.withColumn("seen", F.lit(True))
-    per = (
-        dg.join(first, "gram")
-        .join(seen, "gram", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(
-                (
-                    (F.col("first_doc") == F.col("doc_id"))
-                    & F.col("seen").isNull()
-                ).cast("long")
-            ).alias("n_novel"),
-        )
+    # one pass keyed on gram over the epoch's (doc, gram) rows and the
+    # index rows (doc_id NULL): the window gives each batch row the
+    # gram's first doc in this epoch and whether the index holds it,
+    # so the index is scanned once, with no join
+    by_gram = Window.partitionBy("gram")
+    rows = dg.select("doc_id", "gram").unionByName(
+        index_grams.select(F.lit(None).cast("long").alias("doc_id"), "gram")
+    )
+    keyed = rows.select(
+        "doc_id",
+        "gram",
+        (
+            (F.col("doc_id") == F.min("doc_id").over(by_gram))
+            & ~F.max(F.col("doc_id").isNull()).over(by_gram)
+        ).alias("novel"),
+    ).filter(F.col("doc_id").isNotNull())
+    # the batch's doc ids join the per-doc rollup as zero rows, so a
+    # doc with no grams still gets a verdict
+    per = keyed.select(
+        "doc_id", F.lit(1).alias("g"), F.col("novel").cast("int").alias("v")
+    ).unionByName(
+        batch_docs.select("doc_id", F.lit(0).alias("g"), F.lit(0).alias("v"))
     )
     verdicts = (
-        batch_docs.select("doc_id")
-        .join(per, "doc_id", "left")
+        per.groupBy("doc_id")
+        .agg(
+            F.sum("g").alias("n_grams"),
+            F.sum("v").alias("n_novel"),
+        )
         .select(
             "doc_id",
-            F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-            F.coalesce("n_novel", F.lit(0)).alias("n_novel"),
+            "n_grams",
+            "n_novel",
             F.expr(
                 "CASE WHEN n_grams > 0 THEN (1000 * n_novel) div n_grams"
                 " END"
             ).alias("novelty_milli"),
         )
     )
-    new_grams = (
-        dg.select("gram").distinct().join(index_grams, "gram", "left_anti")
-    )
+    # a new gram's one row: its first doc in the epoch, not in the index
+    new_grams = keyed.filter("novel").select("gram")
     return verdicts, new_grams
 
 
@@ -122,10 +132,10 @@ def novelty_epoch(
 # pmod(xxhash64(gram), P_KEYED) (streaming/keyed_index.py). An epoch
 # collects its own grams' partition ids (bounded by P_KEYED) and
 # reads ONLY those partitions: a stored gram outside them cannot
-# equal any batch gram, so both the seen-probe join and the
-# new-gram anti-join are exact over the pruned subset — the pure
-# epoch function is unchanged. Per-epoch index I/O is bounded by
-# probed-partition occupancy, not |distinct grams seen|.
+# equal any batch gram, so the gram-keyed pass is exact over the
+# pruned subset — the pure epoch function is unchanged. Per-epoch
+# index I/O is bounded by probed-partition occupancy, not |distinct
+# grams seen|.
 
 def _gram_pk() -> F.Column:
     return F.pmod(F.xxhash64(F.col("gram")), F.lit(P_KEYED)).cast("int")

@@ -67,7 +67,7 @@ def _sf_label(path: str) -> float:
 
 def main() -> None:
     import __spark_entry__ as entrymod
-    from angelone_clickhouse_spark.session import get_spark
+    from angelone_clickhouse_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(app_name="bench", master=f"local[{CPUS}]")
     loadavg_start = [round(x, 2) for x in os.getloadavg()]
@@ -128,6 +128,8 @@ def main() -> None:
     run_arrays: dict[str, list[float]] = {}
     timings: dict[str, float] = {}
     query_task_counts: dict[str, int] = {}
+    # codegen compilations per query and pass, beside the task counts
+    query_compiles: dict[str, list[int]] = {}
     failures: dict[str, str] = {}
     registry = list(entrymod.queries().items())
     # interleaved passes: every query once per pass (see module doc)
@@ -151,6 +153,7 @@ def main() -> None:
             # and O(1); the timed region is unchanged in kind.
             group = f"bench-{name}-{_pass}"
             sc.setJobGroup(group, name)
+            compiles0 = codegen_compiles(spark)
             t0 = time.time()
             try:
                 df = fn(spark, SF_DIR)
@@ -162,6 +165,9 @@ def main() -> None:
                 failures[name] = f"{type(e).__name__}: {e}"
             finally:
                 sc.setJobGroup(None, None)
+                query_compiles.setdefault(name, []).append(
+                    codegen_compiles(spark) - compiles0
+                )
                 if _pass == 0:
                     n_tasks = 0
                     for j in tracker.getJobIdsForGroup(group):
@@ -403,6 +409,7 @@ def main() -> None:
         "master": sc.master,
         "default_parallelism": sc.defaultParallelism,
         "query_task_counts": query_task_counts,
+        "query_compiles": query_compiles,
         "loadavg_start": loadavg_start,
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         # queries whose interleaved runs spread > VARIANCE_RATIO: their
@@ -469,6 +476,11 @@ def main() -> None:
         "master": sc.master,
         "default_parallelism": sc.defaultParallelism,
         "tasks_total": sum(query_task_counts.values()),
+        "compiles_total": sum(map(sum, query_compiles.values())),
+        # compilations after the first pass: about 100 a pass at
+        # sf0.001 (generated code with per-call literals); thousands
+        # mean the codegen cache evicts the registry's working set
+        "compiles_warm": sum(sum(c[1:]) for c in query_compiles.values()),
         "n_failures": len(failures),
         "n_high_variance": len(high_variance),
         "detail_file": "bench_full.json",

@@ -494,3 +494,31 @@ def test_split_leakage_audit_invariant_and_planted(spark, sf_dir):
     assert rows["per_cluster"].n_straddle == 0
     assert rows["per_cluster"].straddle_milli == 0
     assert 0 <= rows["per_doc"].n_straddle <= n_pairs
+
+
+def test_simhash_second_call_reads_rewritten_file(spark, sf_dir, tmp_path):
+    """A call after ``documents.parquet`` was rewritten at the same path
+    answers for the new file (the DuckDB oracle over it), not from a
+    frame materialized by the first call."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    import __spark_entry__
+
+    path = tmp_path / "documents.parquet"
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    pq.write_table(docs, path)
+    first = dedup_simhash(spark, str(tmp_path)).count()
+    # drop the first doc of each of the first few candidate pairs
+    gone = sorted({r.doc_a for r in dedup_simhash(spark, str(tmp_path)).collect()})[:3]
+    kept = docs.filter(pc.invert(pc.is_in(docs["doc_id"], pa.array(gone))))
+    pq.write_table(kept, path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    want = sorted(con.sql(__spark_entry__.oracle_sql()["dedup_simhash"]).fetchall())
+    con.close()
+    got = sorted(tuple(r) for r in dedup_simhash(spark, str(tmp_path)).collect())
+    assert got == want
+    assert len(want) < first

@@ -237,11 +237,9 @@ def test_sparse_vec_ids_leave_empty_cells_harmless(spark, monkeypatch):
     # ids all = 1 (mod 3): with BLOCK_ROWS=4 -> n_blocks=3, residues
     # 0 and 2 are EMPTY blocks
     ids = [1, 4, 7, 10, 13, 16, 19, 22, 25, 28]
-    rows = [
-        (int(i), [float(x) for x in rng.randn(8)], "l0") for i in ids
-    ]
+    rows = [(int(i), [float(x) for x in rng.randn(8)], 0) for i in ids]
     df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label string"
+        rows, "vec_id long, embedding array<float>, label int"
     )
     import os
     import tempfile

@@ -24,7 +24,7 @@ _LSH = dict(planes=7, n_tables=4, n_flips=2)
 # jobs run by epoch 0 (empty index) and epoch 1 (index from epoch 0)
 PINNED = {
     "stream_dedup_docs": [13, 13],
-    "stream_novelty_docs": [4, 6],
+    "stream_novelty_docs": [3, 3],
     "stream_semdedup": [4, 8],
     "stream_semdedup_lsh": [8, 8],
     "stream_token_cms": [1, 1],

@@ -2,7 +2,8 @@
 
 For each named registry query: run it through the bench's noop-sink
 methodology (guide §1.4) inside a job group, and report wall seconds
-plus the JOB and STAGE counts the scheduler actually ran — at fixture
+plus the JOB and STAGE counts the scheduler actually ran, its completed
+tasks and the whole-stage codegen classes it compiled — at fixture
 scale most registry entries are overhead-bound, so job/stage/task
 counts are the direct measure of the fixed cost a query pays (and
 the count of driver round-trips is scale-relevant: each one is a
@@ -48,7 +49,7 @@ def main() -> None:
     names += args
 
     import __spark_entry__ as entrymod
-    from angelone_clickhouse_spark.session import get_spark
+    from angelone_clickhouse_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(app_name="profile", master=f"local[{CPUS}]")
     sc = spark.sparkContext
@@ -65,6 +66,7 @@ def main() -> None:
         for r in range(runs):
             group = f"prof-{name}-{r}"
             sc.setJobGroup(group, name)
+            compiles0 = codegen_compiles(spark)
             t0 = time.time()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             secs = round(time.time() - t0, 3)
@@ -88,6 +90,7 @@ def main() -> None:
                     "jobs": len(job_ids),
                     "stages": n_stages,
                     "tasks": n_tasks,
+                    "compiles": codegen_compiles(spark) - compiles0,
                 }
             )
             print(f"{name} run{r}: {per_run[-1]}", flush=True)
