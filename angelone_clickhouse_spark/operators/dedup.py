@@ -622,27 +622,25 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sig = _checkpoint_sized(minhash_signatures(docs), "minhash sigs")
     is_new = (F.col("doc_id") % NEW_DOC_MOD) == 0
-    matches = _incremental_verdicts(sig.filter(is_new), sig.filter(~is_new))
     newdocs = docs.filter(is_new).select("doc_id")
-    return newdocs.join(matches, "doc_id", "left").select(
+    verdicts, _ = gate_verdicts(
+        _incremental_verdicts(sig.filter(is_new), sig.filter(~is_new)),
+        newdocs,
+        newdocs,
         "doc_id",
-        "dup_of_existing",
-        "dup_of_batch",
-        (
-            F.col("dup_of_existing").isNull()
-            & F.col("dup_of_batch").isNull()
-        ).alias("keep"),
     )
+    return verdicts.withColumnRenamed("dup_of_index", "dup_of_existing")
 
 
 def _incremental_verdicts(
     new_sig: DataFrame, index_sig: DataFrame
 ) -> DataFrame:
-    """(doc_id, dup_of_existing, dup_of_batch) for every row of
-    ``new_sig`` that has at least one qualifying match against the
-    index or a smaller-id new row — the shared pair-generation core
-    of :func:`dedup_incremental` (mod-split fixture) and the
-    streaming document gate (per-epoch batch vs survivor index).
+    """Qualified (doc_id, other_id, other_new) pairs: every row of
+    ``new_sig`` against each index row or smaller-id new row whose
+    estimated similarity clears the threshold — the shared
+    pair-generation core of :func:`dedup_incremental` (mod-split
+    fixture) and the streaming document gate (per-epoch batch vs
+    survivor index); :func:`gate_verdicts` turns them into verdicts.
 
     Preconditions: both frames carry (doc_id, h0..h{N-1}) with
     DISJOINT doc_id spaces. No existing-vs-existing candidate is
@@ -667,25 +665,50 @@ def _incremental_verdicts(
         .distinct()
     )
     allsig = new_sig.unionByName(index_sig)
-    verified = (
+    return (
         cand.join(allsig.alias("sa"), cand.doc_id == F.col("sa.doc_id"))
         .join(allsig.alias("sb"), cand.other_id == F.col("sb.doc_id"))
-        .select(
-            cand.doc_id,
-            "other_id",
-            "other_new",
-            F.round(_est_sim(), 4).alias("est"),
-        )
-        .filter(F.col("est") >= JACCARD_THRESHOLD)
+        .filter(F.round(_est_sim(), 4) >= JACCARD_THRESHOLD)
+        .select(cand.doc_id, "other_id", "other_new")
     )
-    return verified.groupBy("doc_id").agg(
+
+
+def gate_verdicts(
+    pairs: DataFrame, ids: DataFrame, rows: DataFrame, key: str
+) -> tuple[DataFrame, DataFrame]:
+    """The one-pass verdict rule every incremental dedup shares, from
+    the qualified ``(key, other_id, other_new)`` pairs of a batch:
+
+    * ``dup_of_index`` — min qualifying index (``other_new`` false) id;
+    * ``dup_of_batch`` — min qualifying smaller batch id (the pairs
+      hold only smaller batch ids);
+    * ``keep`` — both NULL.
+
+    Returns (verdicts, kept): one verdict per ``ids`` row, and the
+    ``rows`` whose verdict keeps them — what joins the survivor index."""
+    m = pairs.groupBy(key).agg(
         F.min(F.when(~F.col("other_new"), F.col("other_id"))).alias(
-            "dup_of_existing"
+            "dup_of_index"
         ),
         F.min(F.when(F.col("other_new"), F.col("other_id"))).alias(
             "dup_of_batch"
         ),
     )
+    verdicts = (
+        ids.select(key)
+        .join(m, key, "left")
+        .select(
+            key,
+            "dup_of_index",
+            "dup_of_batch",
+            (
+                F.col("dup_of_index").isNull()
+                & F.col("dup_of_batch").isNull()
+            ).alias("keep"),
+        )
+    )
+    kept = rows.join(verdicts.filter(F.col("keep")).select(key), key)
+    return verdicts, kept
 
 
 # --- near-dup clustering (connected components) -----------------------------
@@ -1259,59 +1282,54 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- embedding cosine near-dup ---------------------------------------------
-def _with_norm(e: DataFrame) -> DataFrame:
-    v = F.expr("transform(embedding, x -> cast(x as double))")
-    dot_self = F.aggregate(
-        F.zip_with(v, v, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    return e.select("vec_id", v.alias("v"), F.sqrt(dot_self).alias("nrm"))
-
-
-def _cosine(a_v, b_v, a_n, b_n):
-    dot = F.aggregate(
-        F.zip_with(a_v, b_v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    return dot / (a_n * b_n)
-
-
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact pairwise cosine >= threshold over the embeddings table,
     via sound prune-then-verify:
 
-    1. PRUNE: a blocked numpy matmul (mapInPandas over a broadcast
-       corpus block) emits candidate pairs with cosine >= threshold - ε
-       (ε=1e-6 ≫ any float-summation discrepancy, so no true positive
-       can be pruned — the filter is sound, not heuristic).
-    2. VERIFY: only the few candidates get the sequential-sum JVM
+    1. PRUNE: a blocked numpy matmul (embedding_fast.candidate_pairs_fast)
+       emits candidate pairs with cosine >= threshold - ε. NumPy and
+       JVM cosines are both rounded to the 1e-6 grid and can land one
+       step apart, so ε = 2e-6 (two grid steps + noise) keeps the
+       prune sound: no true positive is ever dropped.
+    2. VERIFY: only the few candidates get the sequential-fold JVM
        cosine, whose doubles are bit-identical to DuckDB's
        list_dot_product — preserving exact oracle parity.
 
-    Net: identical output to the naive O(n²) interpreted-expression
-    pairwise plan, at matmul speed (~10x on sf0.1). Elements cast to
-    double before any arithmetic on the verify path."""
+    The matmul does the O(n²) work; the output is identical to the
+    naive pairwise plan. Registered as both ``dedup_embedding`` and
+    ``dedup_embedding_fast``."""
     from angelone_clickhouse_spark.operators.embedding_fast import (
+        _PRUNE_EPS,
         candidate_pairs_fast,
     )
+    from angelone_clickhouse_spark.operators.similarity import _cos, _vectors
 
     cand = candidate_pairs_fast(
-        spark, sf_dir, threshold=COSINE_THRESHOLD - 1e-6
+        spark, sf_dir, COSINE_THRESHOLD - _PRUNE_EPS
     ).select("vec_a", "vec_b")
-    e = _with_norm(load_table(spark, sf_dir, "embeddings"))
-    a = e.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
+    vecs = _vectors(spark, sf_dir)
+    a = vecs.select(
+        F.col("vec_id").alias("vec_a"),
+        F.col("v").alias("av"),
+        F.col("nrm").alias("an"),
     )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    cos = F.round(
-        _cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 6
+    b = vecs.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("v").alias("bv"),
+        F.col("nrm").alias("bn"),
     )
     # candidates are the small side — never broadcast the corpus;
     # AQE turns these into broadcast joins of `cand` when it is tiny
     return (
         cand.join(a, "vec_a")
         .join(b, "vec_b")
-        .select("vec_a", "vec_b", cos.alias("cos_sim"))
+        .select(
+            "vec_a",
+            "vec_b",
+            F.round(
+                _cos(F.col("av"), F.col("bv"), F.col("an"), F.col("bn")), 6
+            ).alias("cos_sim"),
+        )
         .filter(F.col("cos_sim") >= COSINE_THRESHOLD)
     )
 

@@ -1,10 +1,10 @@
 """Vectorized (Arrow + NumPy) embedding similarity — the throughput path.
 
-The exact JVM ops in dedup.py / similarity.py evaluate the cosine as
-interpreted higher-order expressions (zip_with + aggregate): correct,
-oracle-checkable bit-for-bit against DuckDB, but ~lambda-per-element.
-At scale you want BLAS: this module computes the same pairwise /
-top-k cosines as blocked matrix products — with NO driver-side
+The exact JVM cosine (similarity._cos) is an interpreted higher-order
+expression (zip_with + aggregate): correct, oracle-checkable
+bit-for-bit against DuckDB, but ~lambda-per-element. At scale the
+all-pairs work wants BLAS: :func:`candidate_pairs_fast` computes the
+pairwise cosines as blocked matrix products — with NO driver-side
 materialization of the corpus.
 
 Blocking scheme (all-pairs): assign each vector to a block by
@@ -17,42 +17,35 @@ is needed. Shuffle volume is n·n_blocks rows — the standard
 O(n·sqrt(P)) replication of distributed blocked all-pairs — and every
 stage is executor-side; the driver never sees a vector.
 
-Top-k: the small QUERY set (bounded, |Q| = N_QUERIES) is collected
-and broadcast — the corpus streams through ``mapInPandas`` computing
-per-batch partial top-k, merged globally by a window rank over the
-(partitions × |Q| × k)-row partial result. Broadcast-the-small-side /
-stream-the-big-side is the 100 TB shape; the previous revision did
-the inverse (corpus collect to the driver) and is gone.
-
-Both ops finish with an exact JVM re-score of the pruned survivors
-(the interpreted cosine runs only on candidates), which makes their
-output BIT-IDENTICAL to the exact ops — so the exact ops' DuckDB
-oracles check the fast paths verbatim. Equivalence is additionally
-asserted in tests/test_embedding_fast.py. Measured at sf0.1: exact
-JVM pairwise 24.8 s -> vectorized ~1-2 s for identical output.
+Its callers (dedup.dedup_embedding, similarity.semdedup) use it as a
+sound prune at ``threshold - _PRUNE_EPS`` and re-score only the
+survivors with the exact JVM cosine, so their output stays
+BIT-IDENTICAL to the brute-force plans their DuckDB oracles spell.
+Measured at sf0.1: exact JVM pairwise 24.8 s -> vectorized ~1-2 s for
+identical output. The rest of the module is the kNN-graph / LSH ANN
+family and its bucketed, persisted cell index.
 """
 
 from __future__ import annotations
 
 import math
 import os
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from angelone_clickhouse_spark.operators.dedup import COSINE_THRESHOLD
+from angelone_clickhouse_spark.operators.dedup import dedup_embedding
 from angelone_clickhouse_spark.operators.similarity import (
     EMB_DIM,
     N_QUERIES,
     TOP_K,
+    ann_topk_cosine,
 )
-from angelone_clickhouse_spark.sources.tables import load_table
+from angelone_clickhouse_spark.sources.tables import load_table, table_version
 
 PAIR_SCHEMA = "vec_a long, vec_b long, cos_sim double"
-TOPK_SCHEMA = "query_id long, neighbor_id long, cos_sim double, rank int"
 
 # Rows per matmul block. Sized so a (BLOCK_ROWS, dim) float64 block and
 # its (BLOCK_ROWS, BLOCK_ROWS) cosine matrix fit comfortably in an
@@ -132,42 +125,6 @@ def candidate_pairs_fast(
 # 1e-6 grid: a pair can land one grid step apart across engines, so a
 # sound prune widens the threshold by two grid steps + noise.
 _PRUNE_EPS = 2e-6
-
-
-def dedup_embedding_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BLAS prune at (threshold - ε), exact JVM re-score of the few
-    survivors — output is BIT-IDENTICAL to dedup.dedup_embedding, so
-    the same DuckDB oracle checks this path (round 1 left it
-    rows-only; the re-score closes that). The matmul does the O(n²)
-    work; the interpreted zip_with cosine runs only on candidates."""
-    from angelone_clickhouse_spark.operators.similarity import _cos, _vectors
-
-    cand = candidate_pairs_fast(
-        spark, sf_dir, COSINE_THRESHOLD - _PRUNE_EPS
-    ).select("vec_a", "vec_b")
-    vecs = _vectors(spark, sf_dir)
-    a = vecs.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("v").alias("av"),
-        F.col("nrm").alias("an"),
-    )
-    b = vecs.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("bv"),
-        F.col("nrm").alias("bn"),
-    )
-    return (
-        cand.join(a, "vec_a")
-        .join(b, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                _cos(F.col("av"), F.col("bv"), F.col("an"), F.col("bn")), 6
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= COSINE_THRESHOLD)
-    )
 
 
 KNN_K = 5  # neighbors per vector in knn_graph
@@ -748,9 +705,10 @@ def knn_graph_ann_amplified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ANN_INDEX_BUCKETS = 8  # catalog-table bucket count (see bucketing.py)
 
-# (applicationId, sf_dir, n_tables, n_planes) -> (table, planes): the
-# write-once discipline within a session; a new session rebuilds (its
-# in-memory catalog is empty and the temp path is gone).
+# (applicationId, sf_dir, embeddings version, build settings) ->
+# (table, planes): the write-once discipline within a session; a new
+# session rebuilds (its in-memory catalog is empty and the temp path is
+# gone), and so does a rewrite of the embeddings table.
 _ANN_INDEX_CACHE: dict[tuple, tuple[str, int]] = {}
 
 # per-application index-storage roots registered for atexit cleanup
@@ -784,27 +742,20 @@ def _index_path(spark: SparkSession, tag: str) -> str:
 def _cell_rows(vecs: DataFrame, n_tables: int, planes: int) -> DataFrame:
     """(cell_key, vec_id) rows for every (table, vector): one corpus
     pass computes all n_tables bucket ids (deterministic md5-derived
-    hyperplanes, similarity._bucket), then one explode packs
-    cell_key = t * 2^planes + bucket_t(vec). Per-row deterministic
-    given ``planes`` — the property the incremental builder's append
-    path relies on (a delta row's cells never depend on the rest of
-    the corpus)."""
-    from angelone_clickhouse_spark.operators.similarity import _bucket_cols
+    hyperplanes, similarity._bucket), then one explode of
+    similarity._cell_keys. Per-row deterministic given ``planes`` —
+    the property the incremental builder's append path relies on (a
+    delta row's cells never depend on the rest of the corpus)."""
+    from angelone_clickhouse_spark.operators.similarity import (
+        _bucket_cols,
+        _cell_keys,
+    )
 
     b = _bucket_cols(vecs, planes, n_tables)
     return b.select(
+        F.explode(_cell_keys(planes, n_tables, "b")).alias("cell_key"),
         "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    (
-                        F.lit(t * (1 << planes)).cast("long") + F.col(f"b{t}")
-                    ).alias(f"c{t}")
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("cell_key"),
-    ).select("cell_key", "vec_id")
+    )
 
 
 def ann_corpus_index(
@@ -825,7 +776,13 @@ def ann_corpus_index(
     from angelone_clickhouse_spark.operators.similarity import _vectors
     from angelone_clickhouse_spark.sources.bucketing import write_bucketed
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_tables, n_planes)
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        table_version(sf_dir, "embeddings"),
+        n_tables,
+        n_planes,
+    )
     hit = _ANN_INDEX_CACHE.get(key)
     if hit is not None and spark.catalog.tableExists(hit[0]):
         return hit
@@ -911,6 +868,7 @@ def ann_corpus_index_incremental(
         spark.sparkContext.applicationId,
         "incr",
         sf_dir,
+        table_version(sf_dir, "embeddings"),
         n_tables,
         delta_mod,
     )
@@ -1465,79 +1423,6 @@ def purity_from_edges(g: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def ann_topk_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics as similarity.ann_topk_cosine (exact top-k for
-    query vectors, rounded-cosine ordering, neighbor_id tiebreak):
-    the bounded query set broadcasts, the corpus streams through a
-    per-batch matmul + partial top-k, and a window rank merges the
-    partials. No corpus shuffle, no corpus materialization."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # bounded collect: N_QUERIES rows, the broadcast small side
-    q_ids, q = _unit_rows(
-        emb.filter(F.col("vec_id") < N_QUERIES).toPandas()
-    )
-    qb = spark.sparkContext.broadcast((q_ids, q))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, q = qb.value
-        for pdf in batches:
-            c_ids, c = _unit_rows(pdf)
-            cos = np.round(q @ c.T, 6)  # (|Q|, batch)
-            for row, qid in enumerate(q_ids):
-                mask = c_ids != qid
-                cand_ids = c_ids[mask]
-                cand_cos = cos[row][mask]
-                # partial top-(k+slack) by (-cos, id); the slack keeps
-                # the candidate set sound under last-bit ordering
-                # differences vs the exact JVM re-score downstream
-                order = np.lexsort((cand_ids, -cand_cos))[: TOP_K + 8]
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "neighbor_id": cand_ids[order],
-                        "cos_sim": cand_cos[order],
-                        "rank": np.zeros(len(order), dtype=np.int32),
-                    }
-                )
-
-    partial = emb.mapInPandas(score, schema=TOPK_SCHEMA)
-    # exact JVM re-score of the merged partial candidates: output
-    # becomes bit-identical to similarity.ann_topk_cosine, so the
-    # exact op's DuckDB oracle checks this path too. The candidate set
-    # is (partitions x |Q| x slack) rows — the interpreted cosine is
-    # off the hot path.
-    from angelone_clickhouse_spark.operators.similarity import (
-        _cos,
-        _rank_topk,
-        _vectors,
-    )
-
-    cand = partial.select("query_id", "neighbor_id").distinct()
-    vecs = _vectors(spark, sf_dir)
-    nb = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("nv"),
-        F.col("nrm").alias("nn"),
-    )
-    qv = vecs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    return _rank_topk(
-        cand.join(nb, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _cos(F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn")), 6
-            ).alias("cos_sim"),
-        ),
-        TOP_K,
-    )
-
-
 PR_ITERS = 2  # PageRank power iterations (oracle unrolls one CTE pair each)
 PR_DAMP_PCT = 85  # damping factor in percent (d = 0.85)
 PR_INIT_MICRO = 1_000_000  # initial rank, micro units
@@ -1695,8 +1580,9 @@ def triangles_from_edges(g: DataFrame, nodes: DataFrame) -> DataFrame:
 
 
 QUERIES = {
-    "dedup_embedding_fast": dedup_embedding_fast,
-    "ann_topk_fast": ann_topk_fast,
+    # one implementation each, registered under both names
+    "dedup_embedding_fast": dedup_embedding,
+    "ann_topk_fast": ann_topk_cosine,
     "knn_graph": knn_graph,
     "knn_pagerank": knn_pagerank,
     "knn_triangles": knn_triangles,
@@ -2072,9 +1958,9 @@ GROUP BY k.src_id, sl.label
 
 
 def _shared_oracles() -> dict[str, str]:
-    """The fast paths re-score survivors with the exact ops' JVM
-    expression, so their outputs are bit-identical to the exact ops —
-    the same oracle SQL applies verbatim."""
+    """Oracle SQL per registry name. ``dedup_embedding_fast`` and
+    ``ann_topk_fast`` are the same functions as ``dedup_embedding``
+    and ``ann_topk_cosine``, so they reuse those oracles."""
     from angelone_clickhouse_spark.operators import dedup as _dedup
     from angelone_clickhouse_spark.operators import similarity as _sim
 

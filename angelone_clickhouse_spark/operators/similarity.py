@@ -38,10 +38,21 @@ N_PLANES = 4  # 16 buckets; tune up with corpus size (buckets ~ 2^planes)
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     v = F.expr("transform(embedding, x -> cast(x as double))")
-    dot_self = F.aggregate(
-        F.zip_with(v, v, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
+    return e.select("vec_id", "label", v.alias("v"), _norm(v).alias("nrm"))
+
+
+# The cosine's two folds sum in ascending-component order, one double
+# multiply then add per step: bit-identical to DuckDB's
+# list_dot_product, which is what lets every cosine path share the
+# oracles' exact 6-decimal rounding.
+def _norm(v):
+    return F.sqrt(
+        F.aggregate(
+            F.zip_with(v, v, lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
     )
-    return e.select("vec_id", "label", v.alias("v"), F.sqrt(dot_self).alias("nrm"))
 
 
 def _cos(av, bv, an, bn):
@@ -222,6 +233,19 @@ def _bucket_cols(
             F.col(tmp)[t].alias(f"{out_prefix}{t}")
             for t in range(n_tables)
         ],
+    )
+
+
+def _cell_keys(planes: int, n_tables: int, prefix: str) -> F.Column:
+    """array<long> of a row's LSH cells from the bucket columns
+    ``{prefix}0 ..`` that :func:`_bucket_cols` adds: cell_key =
+    t * 2^planes + bucket_t, so one long encodes (table, bucket) and
+    bit-flips below ``planes`` stay inside table t."""
+    return F.array(
+        *[
+            F.lit(t * (1 << planes)).cast("long") + F.col(f"{prefix}{t}")
+            for t in range(n_tables)
+        ]
     )
 
 
@@ -994,16 +1018,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dv = F.expr("transform(embedding, x -> cast(x as double))")
     vecs = e.select("vec_id", gv.alias("g"), dv.alias("v")).select(
-        "vec_id",
-        "g",
-        "v",
-        F.sqrt(
-            F.aggregate(
-                F.zip_with("v", "v", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ).alias("nrm"),
+        "vec_id", "g", "v", _norm(F.col("v")).alias("nrm")
     )
     cents = vecs.filter(
         (F.col("vec_id") >= N_QUERIES)
@@ -1043,15 +1058,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("vb"),
         F.col("nrm").alias("nb"),
     )
-    cos = F.round(
-        F.aggregate(
-            F.zip_with("va", "vb", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (F.col("na") * F.col("nb")),
-        6,
-    )
+    cos = F.round(_cos(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 6)
     dup = (
         cand.join(a, "vec_a")
         .join(b, "vec_b")

@@ -24,7 +24,9 @@ call. Each data file's footer is checked against the declared schema
 on the driver with pyarrow (no Spark job), once per (path,
 st_mtime_ns, st_size): a file rewritten at the same path is checked
 again, and a missing, extra or differently typed column raises
-ValueError. A TIMESTAMP(NANOS) column (perfbench's events) is read as
+ValueError. :func:`table_version` is that triple for every data file
+of a table; the process-wide caches built from a table's rows (gate
+and session replay copies, the bucketed ANN index) key on it. A TIMESTAMP(NANOS) column (perfbench's events) is read as
 a long, which needs ``spark.sql.legacy.parquet.nanosAsLong``; the
 engine session sets it, and ``load_table`` sets it at runtime in a
 plain session that lacks it. The long is then rebuilt as the declared
@@ -128,25 +130,37 @@ def _check_footer(path: str, name: str) -> frozenset[str]:
     return frozenset(nanos)
 
 
-def _nanos_columns(path: str, name: str) -> frozenset[str]:
-    """The declared columns ``path`` (a file or a directory of part
-    files) stores as TIMESTAMP(NANOS), checking each data file's footer
-    when it is new or was rewritten (another mtime or size)."""
+def table_version(
+    sf_dir: str | None, name: str
+) -> tuple[tuple[str, int, int], ...]:
+    """``(path, st_mtime_ns, st_size)`` of each data file of table
+    ``name`` (a file or a directory of part files): a table rewritten
+    at the same path gets another version. Every process-wide cache of
+    a table's rows or derived state keys on it."""
+    path = os.path.join(sf_dir or _sf_dir(), f"{name}.parquet")
     files = (
-        [
+        sorted(
             os.path.join(path, n)
             for n in os.listdir(path)
             if not n.startswith(("_", "."))
-        ]
+        )
         if os.path.isdir(path)
         else [path]
     )
+    return tuple(
+        (f, st.st_mtime_ns, st.st_size) for f in files for st in [os.stat(f)]
+    )
+
+
+def _nanos_columns(sf_dir: str, name: str) -> frozenset[str]:
+    """The declared columns that table ``name`` stores as
+    TIMESTAMP(NANOS), checking each data file's footer when it is new
+    or was rewritten (another mtime or size)."""
     nanos: frozenset[str] = frozenset()
-    for f in files:
-        st = os.stat(f)
+    for f, mtime_ns, size in table_version(sf_dir, name):
         hit = _CHECKED.get(f)
-        if hit is None or hit[:2] != (st.st_mtime_ns, st.st_size):
-            hit = (st.st_mtime_ns, st.st_size, _check_footer(f, name))
+        if hit is None or hit[:2] != (mtime_ns, size):
+            hit = (mtime_ns, size, _check_footer(f, name))
             _CHECKED[f] = hit
         nanos |= hit[2]
     return nanos
@@ -167,7 +181,7 @@ def load_table(spark: SparkSession, sf_dir: str | None, name: str) -> DataFrame:
     sf_dir = sf_dir or _sf_dir()
     path = os.path.join(sf_dir, f"{name}.parquet")
     declared = SCHEMAS[name]
-    nanos = _nanos_columns(path, name)
+    nanos = _nanos_columns(sf_dir, name)
     if not nanos:
         return spark.read.schema(declared).parquet(path)
     # a plain session lacks the conf that get_spark sets

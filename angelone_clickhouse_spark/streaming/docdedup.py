@@ -52,6 +52,7 @@ from angelone_clickhouse_spark.materialize import (
 from angelone_clickhouse_spark.operators.dedup import (
     N_MINHASH,
     _incremental_verdicts,
+    gate_verdicts,
     minhash_signatures,
 )
 from angelone_clickhouse_spark.streaming.epoch_commit import (
@@ -96,24 +97,9 @@ def _dedup_epoch_from_sig(
     split out so the keyed writer (which needs the signatures first,
     to derive its candidate partitions) computes MinHash exactly
     once per epoch."""
-    m = _incremental_verdicts(sig, index_sig)
-    verdicts = (
-        batch_docs.select("doc_id")
-        .join(m, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("dup_of_existing").alias("dup_of_index"),
-            "dup_of_batch",
-            (
-                F.col("dup_of_existing").isNull()
-                & F.col("dup_of_batch").isNull()
-            ).alias("keep"),
-        )
+    return gate_verdicts(
+        _incremental_verdicts(sig, index_sig), batch_docs, sig, "doc_id"
     )
-    kept_sig = sig.join(
-        verdicts.filter(F.col("keep")).select("doc_id"), "doc_id"
-    )
-    return verdicts, kept_sig
 
 
 # --- keyed survivor-index storage (VERDICT r11 weak #1) --------------
@@ -256,37 +242,13 @@ def dedup_epoch_keyed(
         / F.lit(float(N_MINHASH)),
         4,
     )
-    m = (
+    pairs = (
         idx_cand.unionByName(batch_cand)
         .join(F.broadcast(sig), "doc_id")
         .filter(est >= JACCARD_THRESHOLD)
-        .groupBy("doc_id")
-        .agg(
-            F.min(F.when(~F.col("other_new"), F.col("other_id"))).alias(
-                "dup_of_index"
-            ),
-            F.min(F.when(F.col("other_new"), F.col("other_id"))).alias(
-                "dup_of_batch"
-            ),
-        )
+        .select("doc_id", "other_id", "other_new")
     )
-    verdicts = (
-        batch_docs.select("doc_id")
-        .join(m, "doc_id", "left")
-        .select(
-            "doc_id",
-            "dup_of_index",
-            "dup_of_batch",
-            (
-                F.col("dup_of_index").isNull()
-                & F.col("dup_of_batch").isNull()
-            ).alias("keep"),
-        )
-    )
-    kept_sig = sig.join(
-        verdicts.filter(F.col("keep")).select("doc_id"), "doc_id"
-    )
-    return verdicts, kept_sig
+    return gate_verdicts(pairs, batch_docs, sig, "doc_id")
 
 
 def dedup_docs_gate(

@@ -12,16 +12,16 @@ corpus, then the survivors extend the index. Semantics per epoch, at
 * ``dup_of_index`` — smallest indexed (kept-earlier) vec_id whose
   cosine clears the threshold (NULL if none);
 * ``dup_of_batch`` — smallest SMALLER-id vector in the SAME epoch
-  that clears it, kept or not (the one-pass within-batch rule shared
-  with ``dedup_incremental``);
+  that clears it, kept or not (the one-pass within-batch rule of
+  ``dedup.gate_verdicts``, shared with ``dedup_incremental``);
 * ``keep``         — both NULL. Only kept vectors join the index.
 
 Per-epoch compute is the repo's BLAS prune + exact re-verify device
 (dedup_embedding / embedding_fast): the bounded arriving epoch is
-collected and BROADCAST (bounded by the trigger, the ann_topk_fast
-contract — the small side moves, the corpus never does); the index
-streams through ``mapInPandas`` computing one numpy matmul per Arrow
-batch at (threshold - ε), a sound prune; only the few candidates get
+collected and BROADCAST (bounded by the trigger — the small side
+moves, the corpus never does); the index streams through
+``mapInPandas`` computing one numpy matmul per Arrow batch at
+(threshold - ε), a sound prune; only the few candidates get
 the sequential-fold JVM cosine that is bit-identical to DuckDB's
 list_dot_product — so the epoch-unrolled brute-force oracle checks
 the whole pruned path verbatim.
@@ -58,7 +58,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from angelone_clickhouse_spark import SCHEMAS
-from angelone_clickhouse_spark.operators.dedup import COSINE_THRESHOLD
+from angelone_clickhouse_spark.operators.dedup import (
+    COSINE_THRESHOLD,
+    gate_verdicts,
+)
+from angelone_clickhouse_spark.operators.similarity import (
+    _bucket_cols,
+    _cell_keys,
+    _cos,
+    _norm,
+)
 from angelone_clickhouse_spark.streaming.epoch_commit import (
     N_STREAM_EPOCHS,
     replay_gate,
@@ -87,6 +96,15 @@ def _as_double_vecs(emb: DataFrame) -> DataFrame:
     )
 
 
+def _verified() -> F.Column:
+    """The exact re-verify of a candidate pair: the rounded cosine of
+    (av, an) and (bv, bn) clears the threshold."""
+    return (
+        F.round(_cos(F.col("av"), F.col("bv"), F.col("an"), F.col("bn")), 6)
+        >= COSINE_THRESHOLD
+    )
+
+
 def semdedup_epoch(
     batch_emb: DataFrame, index_vec: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
@@ -97,7 +115,6 @@ def semdedup_epoch(
         _PRUNE_EPS,
         _unit_rows,
     )
-    from angelone_clickhouse_spark.operators.similarity import _cos
 
     spark = batch_emb.sparkSession
     # bounded collect: one trigger's worth of vectors — the broadcast
@@ -150,14 +167,7 @@ def semdedup_epoch(
 
     cand = corpus.mapInPandas(prune, schema=_CAND_SCHEMA)
     # exact JVM re-verify of the pruned candidates only
-    nrm = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("v"), F.col("v"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
-    vecs = corpus.select("vec_id", "v", nrm.alias("nrm"))
+    vecs = corpus.select("vec_id", "v", _norm(F.col("v")).alias("nrm"))
     va = vecs.select(
         F.col("vec_id").alias("vec_id"),
         F.col("v").alias("av"),
@@ -168,42 +178,13 @@ def semdedup_epoch(
         F.col("v").alias("bv"),
         F.col("nrm").alias("bn"),
     )
-    m = (
+    pairs = (
         cand.join(va, "vec_id")
         .join(vb, "other_id")
-        .filter(
-            F.round(
-                _cos(F.col("av"), F.col("bv"), F.col("an"), F.col("bn")), 6
-            )
-            >= COSINE_THRESHOLD
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.min(F.when(~F.col("other_new"), F.col("other_id"))).alias(
-                "dup_of_index"
-            ),
-            F.min(F.when(F.col("other_new"), F.col("other_id"))).alias(
-                "dup_of_batch"
-            ),
-        )
+        .filter(_verified())
+        .select("vec_id", "other_id", "other_new")
     )
-    verdicts = (
-        new_vec.select("vec_id")
-        .join(m, "vec_id", "left")
-        .select(
-            "vec_id",
-            "dup_of_index",
-            "dup_of_batch",
-            (
-                F.col("dup_of_index").isNull()
-                & F.col("dup_of_batch").isNull()
-            ).alias("keep"),
-        )
-    )
-    kept_vec = new_vec.join(
-        verdicts.filter(F.col("keep")).select("vec_id"), "vec_id"
-    )
-    return verdicts, kept_vec
+    return gate_verdicts(pairs, new_vec, new_vec, "vec_id")
 
 
 def read_vec_index(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -256,19 +237,10 @@ INDEX_LSH_SCHEMA = "vec_id long, v array<double>, cells array<long>"
 
 def _with_cells(vec: DataFrame, planes: int, n_tables: int) -> DataFrame:
     """(vec_id, v) -> + cells array<long>: the vector's own cell key
-    per table, cell_key = t * 2^planes + bucket_t (the
-    ann_corpus_index encoding)."""
-    from angelone_clickhouse_spark.operators.similarity import _bucket_cols
-
+    per table (the ann_corpus_index encoding, similarity._cell_keys)."""
     b = _bucket_cols(vec, planes, n_tables, out_prefix="_b")
     return b.select(
-        *vec.columns,
-        F.array(
-            *[
-                F.lit(t * (1 << planes)).cast("long") + F.col(f"_b{t}")
-                for t in range(n_tables)
-            ]
-        ).alias("cells"),
+        *vec.columns, _cell_keys(planes, n_tables, "_b").alias("cells")
     )
 
 
@@ -313,8 +285,6 @@ def semdedup_lsh_epoch(
     returns (verdicts, kept_vectors_with_cells). ``index_vec`` carries
     INDEX_LSH_SCHEMA. dup_of_index/dup_of_batch are the smallest
     qualifying ids among LSH-collided, exactly-verified pairs."""
-    from angelone_clickhouse_spark.operators.similarity import _cos
-
     new_vec = _with_cells(
         _as_double_vecs(batch_emb), planes, n_tables
     ).localCheckpoint(eager=True)
@@ -338,15 +308,10 @@ def semdedup_lsh_epoch(
         # within the batch only smaller ids qualify (the one-pass rule)
         (~F.col("other_new")) | (F.col("other_id") < F.col("vec_id"))
     )
-    nrm = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("v"), F.col("v"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
     va = F.broadcast(
-        new_vec.select("vec_id", F.col("v").alias("av"), nrm.alias("an"))
+        new_vec.select(
+            "vec_id", F.col("v").alias("av"), _norm(F.col("v")).alias("an")
+        )
     )
     vb = (
         index_vec.select("vec_id", "v")
@@ -354,7 +319,7 @@ def semdedup_lsh_epoch(
         .select(
             F.col("vec_id").alias("other_id"),
             F.col("v").alias("bv"),
-            nrm.alias("bn"),
+            _norm(F.col("v")).alias("bn"),
         )
     )
     # The exact re-verify tail PINS the candidate side as the
@@ -367,43 +332,14 @@ def semdedup_lsh_epoch(
     # ever made collisions outgrow driver memory, the correct degrade
     # is removing this hint (a shuffle join), not silently inheriting
     # one — hence the pin.
-    m = (
+    pairs = (
         F.broadcast(cand)
         .join(vb, "other_id")
         .join(va, "vec_id")
-        .filter(
-            F.round(
-                _cos(F.col("av"), F.col("bv"), F.col("an"), F.col("bn")), 6
-            )
-            >= COSINE_THRESHOLD
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.min(F.when(~F.col("other_new"), F.col("other_id"))).alias(
-                "dup_of_index"
-            ),
-            F.min(F.when(F.col("other_new"), F.col("other_id"))).alias(
-                "dup_of_batch"
-            ),
-        )
+        .filter(_verified())
+        .select("vec_id", "other_id", "other_new")
     )
-    verdicts = (
-        new_vec.select("vec_id")
-        .join(m, "vec_id", "left")
-        .select(
-            "vec_id",
-            "dup_of_index",
-            "dup_of_batch",
-            (
-                F.col("dup_of_index").isNull()
-                & F.col("dup_of_batch").isNull()
-            ).alias("keep"),
-        )
-    )
-    kept_vec = new_vec.join(
-        verdicts.filter(F.col("keep")).select("vec_id"), "vec_id"
-    )
-    return verdicts, kept_vec
+    return gate_verdicts(pairs, new_vec, new_vec, "vec_id")
 
 
 # --- keyed survivor-index storage (VERDICT r11 weak #1) --------------
@@ -484,8 +420,6 @@ def semdedup_lsh_epoch_keyed(
     when the caller holds it (the keyed writer derives its probe
     partitions from the same frame — the cell projection md5s run
     once per epoch, not twice); None computes it here."""
-    from angelone_clickhouse_spark.operators.similarity import _cos
-
     if new_vec is None:
         new_vec = _with_cells(
             _as_double_vecs(batch_emb), planes, n_tables
@@ -495,13 +429,6 @@ def semdedup_lsh_epoch_keyed(
             "vec_id",
             F.explode(_probe_keys(planes, n_flips)).alias("cell_key"),
         ).dropDuplicates(["vec_id", "cell_key"])
-    )
-    nrm_of = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.zip_with(c, c, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
     )
     idx_cand = (
         stored_rows.select(
@@ -527,48 +454,17 @@ def semdedup_lsh_epoch_keyed(
     )
     va = F.broadcast(
         new_vec.select(
-            "vec_id", F.col("v").alias("av"), nrm_of(F.col("v")).alias("an")
+            "vec_id", F.col("v").alias("av"), _norm(F.col("v")).alias("an")
         )
     )
-    m = (
+    pairs = (
         idx_cand.unionByName(batch_cand)
         .join(va, "vec_id")
-        .filter(
-            F.round(
-                _cos(
-                    F.col("av"), F.col("bv"), F.col("an"), nrm_of(F.col("bv"))
-                ),
-                6,
-            )
-            >= COSINE_THRESHOLD
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.min(F.when(~F.col("other_new"), F.col("other_id"))).alias(
-                "dup_of_index"
-            ),
-            F.min(F.when(F.col("other_new"), F.col("other_id"))).alias(
-                "dup_of_batch"
-            ),
-        )
+        .withColumn("bn", _norm(F.col("bv")))
+        .filter(_verified())
+        .select("vec_id", "other_id", "other_new")
     )
-    verdicts = (
-        new_vec.select("vec_id")
-        .join(m, "vec_id", "left")
-        .select(
-            "vec_id",
-            "dup_of_index",
-            "dup_of_batch",
-            (
-                F.col("dup_of_index").isNull()
-                & F.col("dup_of_batch").isNull()
-            ).alias("keep"),
-        )
-    )
-    kept_vec = new_vec.join(
-        verdicts.filter(F.col("keep")).select("vec_id"), "vec_id"
-    )
-    return verdicts, kept_vec
+    return gate_verdicts(pairs, new_vec, new_vec, "vec_id")
 
 
 def semdedup_lsh_gate(

@@ -245,9 +245,10 @@ def run_epochs(
     await_or_raise(q, REPLAY_TIMEOUT_S, f"{table} replay")
 
 
-# one replay dir per (sf_dir, table): building it is harness setup, not
-# operator work; every gate run replays it into fresh sinks
-_REPLAY_CACHE: dict[tuple[str, str], str] = {}
+# one replay dir per (sf_dir, table, table version): building it is
+# harness setup, not operator work; every gate run replays it into
+# fresh sinks, and a table rewritten in place gets a new one
+_REPLAY_CACHE: dict[tuple, str] = {}
 
 
 def replay_gate(
@@ -261,11 +262,14 @@ def replay_gate(
     """Replay ``table`` in N_STREAM_EPOCHS epochs through a gate whose
     epoch function is ``epoch_fn``, into fresh sinks under a
     ``<name>_run_*`` work dir. Returns the sink dirs."""
-    src = _REPLAY_CACHE.get((sf_dir, table))
+    from angelone_clickhouse_spark.sources.tables import table_version
+
+    key = (sf_dir, table, table_version(sf_dir, table))
+    src = _REPLAY_CACHE.get(key)
     if src is None:
         src = os.path.join(owned_tmpdir(prefix=f"replay_{table}_"), "in")
         write_replay(spark, sf_dir, table, src)
-        _REPLAY_CACHE[(sf_dir, table)] = src
+        _REPLAY_CACHE[key] = src
     work = owned_tmpdir(prefix=f"{name}_run_")
     dirs = [os.path.join(work, s) for s in sinks]
     writer = make_epoch_writer(epoch_fn, *dirs)

@@ -63,8 +63,9 @@ STATE_SCHEMA = StructType(
 
 _GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 
-# sf_dir -> normalized events replay dir (reused across gap_sessions calls)
-_REPLAY_CACHE: dict[str, str] = {}
+# (sf_dir, events version) -> normalized events replay dir (reused
+# across gap_sessions calls until the events table is rewritten)
+_REPLAY_CACHE: dict[tuple, str] = {}
 
 
 def _sessionize_group(
@@ -131,18 +132,22 @@ def gap_sessions(spark, sf_dir: str) -> DataFrame:
     
     from pyspark.sql import functions as F
 
-    from angelone_clickhouse_spark.sources.tables import load_table
+    from angelone_clickhouse_spark.sources.tables import (
+        load_table,
+        table_version,
+    )
 
     work = owned_tmpdir(prefix="gap_sessions_")
     ev = load_table(spark, sf_dir, "events")
     # the normalized replay copy is harness setup, not operator work —
     # reuse it across calls (bench runs each query 3x); the streaming
     # job below re-runs in full every call with a fresh checkpoint
-    src = _REPLAY_CACHE.get(sf_dir)
+    key = (sf_dir, table_version(sf_dir, "events"))
+    src = _REPLAY_CACHE.get(key)
     if src is None:
         src = os.path.join(work, "in")
         ev.coalesce(1).write.parquet(src)
-        _REPLAY_CACHE[sf_dir] = src
+        _REPLAY_CACHE[key] = src
     name = "gap_sessions_" + os.path.basename(work).rsplit("_", 1)[-1]
     stream = spark.readStream.schema(ev.schema).parquet(src)
     q = (

@@ -4,9 +4,9 @@ Every epoch-replay op (stream_dedup_docs, stream_novelty_docs,
 stream_semdedup[_lsh], stream_token_cms) needs two kinds of scratch:
 
 * a REPLAY input dir (the documents/embeddings table split into
-  ``N_STREAM_EPOCHS`` files) — cached per (sf_dir, table) because it
-  is a pure function of the fixture and re-splitting it per
-  invocation would dominate the bench; and
+  ``N_STREAM_EPOCHS`` files) — cached per (sf_dir, table, table
+  version) because it is a pure function of the table's files and
+  re-splitting it per invocation would dominate the bench; and
 * a PER-RUN work dir (epoch-committed store + checkpoint) — fresh
   per invocation because the replay must start from an empty store.
 

@@ -6,10 +6,6 @@ from pyspark.sql import functions as F
 
 from angelone_clickhouse_spark.operators import embedding_fast
 from angelone_clickhouse_spark.operators.dedup import dedup_embedding
-from angelone_clickhouse_spark.operators.embedding_fast import (
-    ann_topk_fast,
-    dedup_embedding_fast,
-)
 from angelone_clickhouse_spark.operators.similarity import N_QUERIES, ann_topk_cosine
 
 
@@ -52,31 +48,18 @@ def _assert_probe_side_only_exchange(plan: str) -> None:
     gen_i = [i for i, a in enumerate(anc) if a.startswith("Generate")]
     assert gen_i and gen_i[0] > ex_i, anc
 
-def test_fast_pairs_equal_exact(spark, sf_dir):
-    exact = {
-        (r.vec_a, r.vec_b): r.cos_sim for r in dedup_embedding(spark, sf_dir).collect()
-    }
-    fast = {
-        (r.vec_a, r.vec_b): r.cos_sim
-        for r in dedup_embedding_fast(spark, sf_dir).collect()
-    }
-    assert set(exact) == set(fast)
-    for k in exact:
-        assert abs(exact[k] - fast[k]) <= 1e-6  # identical after round(6)
+def test_retargeted_registry_names_share_one_callable():
+    """Each fast name is registered on the one kept implementation and
+    checked by the same oracle as its exact twin."""
+    import __spark_entry__ as entrymod
 
-
-def test_fast_topk_equal_exact(spark, sf_dir):
-    exact = sorted(
-        (r.query_id, r.rank, r.neighbor_id, r.cos_sim)
-        for r in ann_topk_cosine(spark, sf_dir).collect()
-    )
-    fast = sorted(
-        (r.query_id, r.rank, r.neighbor_id, r.cos_sim)
-        for r in ann_topk_fast(spark, sf_dir).collect()
-    )
-    assert [t[:3] for t in exact] == [t[:3] for t in fast]
-    for a, b in zip(exact, fast):
-        assert abs(a[3] - b[3]) <= 1e-6
+    reg, orc = entrymod.queries(), entrymod.oracle_sql()
+    for fast, kept in (
+        ("dedup_embedding_fast", "dedup_embedding"),
+        ("ann_topk_fast", "ann_topk_cosine"),
+    ):
+        assert reg[fast] is reg[kept]
+        assert orc[fast] == orc[kept]
 
 
 def test_fast_pairs_multiblock_equal_singleblock(spark, sf_dir, monkeypatch):
@@ -85,12 +68,12 @@ def test_fast_pairs_multiblock_equal_singleblock(spark, sf_dir, monkeypatch):
     single-block result."""
     one = sorted(
         (r.vec_a, r.vec_b, r.cos_sim)
-        for r in dedup_embedding_fast(spark, sf_dir).collect()
+        for r in dedup_embedding(spark, sf_dir).collect()
     )
     monkeypatch.setattr(embedding_fast, "BLOCK_ROWS", 64)  # 500 rows -> 8 blocks
     many = sorted(
         (r.vec_a, r.vec_b, r.cos_sim)
-        for r in dedup_embedding_fast(spark, sf_dir).collect()
+        for r in dedup_embedding(spark, sf_dir).collect()
     )
     assert one == many
 
@@ -117,9 +100,8 @@ def test_no_unbounded_driver_materialization(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(pyspark.sql.DataFrame, "collect", spy_collect)
     monkeypatch.setattr(pyspark.sql.DataFrame, "toPandas", spy_topandas)
     plans = [
-        dedup_embedding_fast(spark, sf_dir),
-        ann_topk_fast(spark, sf_dir),
         dedup_embedding(spark, sf_dir),
+        ann_topk_cosine(spark, sf_dir),
     ]
     assert max(seen, default=0) <= N_QUERIES
     monkeypatch.undo()
