@@ -711,6 +711,60 @@ def gate_verdicts(
     return verdicts, kept
 
 
+def gate_verdicts_sql(ctes: str, rows: str, key: str) -> str:
+    """DuckDB twin of a survivor-index stream gate: the
+    :func:`gate_verdicts` rule unrolled over the replay's epochs
+    (epoch k = ``key % N_STREAM_EPOCHS``).
+
+    ``ctes`` is a ``WITH`` list whose last CTE is ``pairs(a_id,
+    b_id)``: every directed qualifying pair, computed once. ``rows``
+    holds one row per ``key``. Per epoch k, ``m{k}`` takes a's pairs
+    with smaller same-epoch ids and with survivors ``kept{k-1}`` of
+    earlier epochs, ``v{k}`` is the epoch's verdicts and ``kept{k}``
+    the survivor index after it; the query is the union of the
+    ``v{k}``."""
+    from angelone_clickhouse_spark.streaming.epoch_commit import (
+        N_STREAM_EPOCHS as ne,
+    )
+
+    blocks = []
+    for k in range(ne):
+        prev = f"kept{k - 1}" if k else None
+        index_arm = (
+            f"OR (b_id % {ne} < {k} AND b_id IN (SELECT {key} FROM {prev}))"
+            if prev
+            else ""
+        )
+        blocks.append(
+            f"""m{k} AS MATERIALIZED (
+  SELECT a_id AS {key},
+         min(CASE WHEN NOT (b_id % {ne} = {k}) THEN b_id END)
+           AS dup_of_index,
+         min(CASE WHEN (b_id % {ne} = {k}) THEN b_id END)
+           AS dup_of_batch
+  FROM pairs
+  WHERE a_id % {ne} = {k}
+    AND ((b_id % {ne} = {k} AND b_id < a_id)
+         {index_arm})
+  GROUP BY a_id
+),
+v{k} AS MATERIALIZED (
+  SELECT r.{key}, m.dup_of_index, m.dup_of_batch,
+         (m.dup_of_index IS NULL AND m.dup_of_batch IS NULL) AS keep
+  FROM {rows} r LEFT JOIN m{k} m USING ({key})
+  WHERE r.{key} % {ne} = {k}
+),
+kept{k} AS MATERIALIZED (
+  SELECT {key} FROM v{k} WHERE keep{
+      f'''
+  UNION ALL
+  SELECT {key} FROM {prev}''' if prev else ""}
+)"""
+        )
+    union = "\nUNION ALL\n".join(f"SELECT * FROM v{k}" for k in range(ne))
+    return ctes + ",\n" + ",\n".join(blocks) + "\n" + union
+
+
 # --- near-dup clustering (connected components) -----------------------------
 # lineage cut between iterative rounds: localCheckpoint by default,
 # reliable checkpoint when a checkpoint_dir is threaded through — the

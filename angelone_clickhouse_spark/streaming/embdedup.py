@@ -61,6 +61,7 @@ from angelone_clickhouse_spark import SCHEMAS
 from angelone_clickhouse_spark.operators.dedup import (
     COSINE_THRESHOLD,
     gate_verdicts,
+    gate_verdicts_sql,
 )
 from angelone_clickhouse_spark.operators.similarity import (
     _bucket_cols,
@@ -68,13 +69,11 @@ from angelone_clickhouse_spark.operators.similarity import (
     _cos,
     _norm,
 )
-from angelone_clickhouse_spark.streaming.epoch_commit import (
-    N_STREAM_EPOCHS,
-    replay_gate,
-)
+from angelone_clickhouse_spark.streaming.epoch_commit import replay_gate
 from angelone_clickhouse_spark.streaming.keyed_index import (
     PART_COL,
     checkpoint_with_pks,
+    keyed_pairs,
     pk_of,
     read_keyed,
 )
@@ -98,9 +97,11 @@ def _as_double_vecs(emb: DataFrame) -> DataFrame:
 
 def _verified() -> F.Column:
     """The exact re-verify of a candidate pair: the rounded cosine of
-    (av, an) and (bv, bn) clears the threshold."""
+    the batch vector ``av`` (norm ``an``) and the other vector ``bv``
+    clears the threshold."""
+    bv = F.col("bv")
     return (
-        F.round(_cos(F.col("av"), F.col("bv"), F.col("an"), F.col("bn")), 6)
+        F.round(_cos(F.col("av"), bv, F.col("an"), _norm(bv)), 6)
         >= COSINE_THRESHOLD
     )
 
@@ -173,11 +174,7 @@ def semdedup_epoch(
         F.col("v").alias("av"),
         F.col("nrm").alias("an"),
     )
-    vb = vecs.select(
-        F.col("vec_id").alias("other_id"),
-        F.col("v").alias("bv"),
-        F.col("nrm").alias("bn"),
-    )
+    vb = vecs.select(F.col("vec_id").alias("other_id"), F.col("v").alias("bv"))
     pairs = (
         cand.join(va, "vec_id")
         .join(vb, "other_id")
@@ -221,7 +218,7 @@ def stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(VERDICT_SCHEMA).parquet(out_dir)
 
 
-# --- LSH-fronted twin (VERDICT r10 weak #2) --------------------------
+# --- LSH-fronted gate ------------------------------------------------
 #
 # Same gate, but a pair can only be a duplicate if the NEW vector's
 # multi-probe cell set hits one of the other vector's stored cells —
@@ -258,103 +255,16 @@ def _probe_keys(planes: int, n_flips: int) -> F.Column:
     )
 
 
-def _lsh_candidates(
-    probe_cells: DataFrame, stored_cells: DataFrame
-) -> DataFrame:
-    """Collision join: (new_id, cell_key) probes x (old_id, cell_key)
-    stored -> candidate (vec_id=new, other_id=old) pairs. The probe
-    side is the bounded arriving epoch and is BROADCAST, so the
-    stored side (the index) never shuffles — scan, pipeline explode,
-    hash-probe, done. Duplicate pairs from multi-table collisions are
-    left in: the verify tail min-aggregates, so they cost one extra
-    cheap cosine each instead of a dedup shuffle of vector-carrying
-    rows."""
-    return stored_cells.join(F.broadcast(probe_cells), "cell_key").filter(
-        F.col("other_id") != F.col("vec_id")
-    )
-
-
-def semdedup_lsh_epoch(
-    batch_emb: DataFrame,
-    index_vec: DataFrame,
-    planes: int,
-    n_tables: int,
-    n_flips: int,
-) -> tuple[DataFrame, DataFrame]:
-    """One epoch of the LSH-fronted gate (pure frame-in/frame-out):
-    returns (verdicts, kept_vectors_with_cells). ``index_vec`` carries
-    INDEX_LSH_SCHEMA. dup_of_index/dup_of_batch are the smallest
-    qualifying ids among LSH-collided, exactly-verified pairs."""
-    new_vec = _with_cells(
-        _as_double_vecs(batch_emb), planes, n_tables
-    ).localCheckpoint(eager=True)
-    probe = F.broadcast(
-        new_vec.select(
-            F.col("vec_id"),
-            F.explode(_probe_keys(planes, n_flips)).alias("cell_key"),
-        ).dropDuplicates(["vec_id", "cell_key"])
-    )
-    idx_cells = index_vec.select(
-        F.col("vec_id").alias("other_id"),
-        F.explode("cells").alias("cell_key"),
-        F.lit(False).alias("other_new"),
-    )
-    batch_cells = new_vec.select(
-        F.col("vec_id").alias("other_id"),
-        F.explode("cells").alias("cell_key"),
-        F.lit(True).alias("other_new"),
-    )
-    cand = _lsh_candidates(probe, idx_cells.unionByName(batch_cells)).filter(
-        # within the batch only smaller ids qualify (the one-pass rule)
-        (~F.col("other_new")) | (F.col("other_id") < F.col("vec_id"))
-    )
-    va = F.broadcast(
-        new_vec.select(
-            "vec_id", F.col("v").alias("av"), _norm(F.col("v")).alias("an")
-        )
-    )
-    vb = (
-        index_vec.select("vec_id", "v")
-        .unionByName(new_vec.select("vec_id", "v"))
-        .select(
-            F.col("vec_id").alias("other_id"),
-            F.col("v").alias("bv"),
-            _norm(F.col("v")).alias("bn"),
-        )
-    )
-    # The exact re-verify tail PINS the candidate side as the
-    # broadcast build (VERDICT r11 note #3: previously only AQE's
-    # runtime size estimate kept this from degrading to a full
-    # shuffle of the index): candidates are bounded by LSH collision
-    # volume (measured sublinear in tests/test_embdedup.py), and vb —
-    # the pruned index scan ∪ the bounded batch — streams through the
-    # hash join with no Exchange. If an adversarial key distribution
-    # ever made collisions outgrow driver memory, the correct degrade
-    # is removing this hint (a shuffle join), not silently inheriting
-    # one — hence the pin.
-    pairs = (
-        F.broadcast(cand)
-        .join(vb, "other_id")
-        .join(va, "vec_id")
-        .filter(_verified())
-        .select("vec_id", "other_id", "other_new")
-    )
-    return gate_verdicts(pairs, new_vec, new_vec, "vec_id")
-
-
-# --- keyed survivor-index storage (VERDICT r11 weak #1) --------------
+# --- keyed survivor-index storage -----------------------------------
 #
 # The LSH gate's survivor index is persisted PHYSICALLY KEYED on the
 # collision key (keyed_index.py): one replica of the survivor row
 # (vec_id, v, cells) per cell, hive-partitioned on pmod(cell_key,
-# P_KEYED). Each epoch derives its bounded probe-key set, prunes the
-# scan to those partitions, and feeds the pruned survivors into the
-# UNCHANGED pure epoch function — pruning is semantics-preserving
-# (a survivor sharing no probed cell can never collide), so the same
-# driver oracle checks the keyed path verbatim. Per-epoch index I/O
-# is thereby O(occupancy of probed partitions): the r10 prescription
-# ("probe only candidate buckets") now holds PHYSICALLY, not just for
-# compute.
+# P_KEYED). Each epoch derives its bounded probe-key set and prunes
+# the scan to those partitions — pruning is semantics-preserving (a
+# survivor sharing no probed cell can never collide), so the driver
+# oracle checks the keyed path verbatim. Per-epoch index I/O is
+# thereby O(occupancy of probed partitions).
 
 KEYED_LSH_SCHEMA = (
     "cell_key long, vec_id long, v array<double>, cells array<long>"
@@ -385,84 +295,44 @@ def read_lsh_index(
 
 
 def semdedup_lsh_epoch_keyed(
-    batch_emb: DataFrame,
+    new_vec: DataFrame,
     stored_rows: DataFrame,
     planes: int,
-    n_tables: int,
     n_flips: int,
-    new_vec: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """One epoch of the LSH gate against the KEYED store's raw
-    replica rows (``cell_key, vec_id, v`` — pre-pruned to the epoch's
-    probe partitions; the ``cells`` column is column-pruned away).
-    Semantics are IDENTICAL to :func:`semdedup_lsh_epoch` (the tests'
-    sequential replica and the driver oracle both check it); the plan
-    exploits the layout:
+    """One epoch of the LSH gate: the batch's celled vectors
+    ``new_vec`` (INDEX_LSH_SCHEMA, checkpointed) against the KEYED
+    store's replica rows (``cell_key, vec_id, v`` — pruned to the
+    epoch's probe partitions). Returns (verdicts, kept survivors).
+    dup_of_index/dup_of_batch are the smallest qualifying ids among
+    LSH-collided, exactly-verified pairs.
 
-    * the store rows ARE the exploded (cell_key -> survivor) mapping,
-      so the collision join consumes the pruned scan directly — no
-      re-explode, no dropDuplicates shuffle;
-    * each replica row carries the survivor's VECTOR inline, so the
-      exact re-verify reads nothing further — one pruned scan feeds
-      candidate generation AND verification (the r10 prescription's
-      physical half);
-    * multi-cell collisions yield duplicate (vec_id, other_id) rows;
-      they cost one extra cheap cosine each and collapse in the
-      min-aggregate — the family's standing convention (see
-      ``_lsh_candidates``).
-
-    Index-side plan shape, asserted structurally in tests: the pruned
-    FileScan's first join ancestor is a BroadcastHashJoin with no
-    Exchange in between (the batch side broadcasts; the index side
-    never shuffles).
-
-    ``new_vec`` is the batch's already-celled-and-checkpointed frame
-    when the caller holds it (the keyed writer derives its probe
-    partitions from the same frame — the cell projection md5s run
-    once per epoch, not twice); None computes it here."""
-    if new_vec is None:
-        new_vec = _with_cells(
-            _as_double_vecs(batch_emb), planes, n_tables
-        ).localCheckpoint(eager=True)
-    probe = F.broadcast(
-        new_vec.select(
-            "vec_id",
-            F.explode(_probe_keys(planes, n_flips)).alias("cell_key"),
-        ).dropDuplicates(["vec_id", "cell_key"])
-    )
-    idx_cand = (
+    The store rows ARE the exploded (cell_key -> survivor) mapping, so
+    the collision join consumes the pruned scan directly, and each
+    replica carries the survivor's VECTOR inline, so the exact
+    re-verify reads nothing further. Index-side plan shape, asserted
+    structurally in tests: the pruned FileScan's first join ancestor
+    is a BroadcastHashJoin with no Exchange in between."""
+    probe = new_vec.select(
+        "vec_id",
+        F.explode(_probe_keys(planes, n_flips)).alias("cell_key"),
+    ).dropDuplicates(["vec_id", "cell_key"])
+    pairs = keyed_pairs(
+        probe,
         stored_rows.select(
-            "cell_key",
+            "cell_key", F.col("vec_id").alias("other_id"), F.col("v").alias("bv")
+        ),
+        new_vec.select(
+            F.explode("cells").alias("cell_key"),
             F.col("vec_id").alias("other_id"),
             F.col("v").alias("bv"),
-        )
-        .join(probe, "cell_key")
-        .filter(F.col("other_id") != F.col("vec_id"))
-        .select(
-            "vec_id", "other_id", "bv", F.lit(False).alias("other_new")
-        )
-    )
-    batch_cells = new_vec.select(
-        F.col("vec_id").alias("other_id"),
-        F.explode("cells").alias("cell_key"),
-        F.col("v").alias("bv"),
-    )
-    batch_cand = (
-        batch_cells.join(probe, "cell_key")
-        .filter(F.col("other_id") < F.col("vec_id"))
-        .select("vec_id", "other_id", "bv", F.lit(True).alias("other_new"))
-    )
-    va = F.broadcast(
+        ),
         new_vec.select(
             "vec_id", F.col("v").alias("av"), _norm(F.col("v")).alias("an")
-        )
-    )
-    pairs = (
-        idx_cand.unionByName(batch_cand)
-        .join(va, "vec_id")
-        .withColumn("bn", _norm(F.col("bv")))
-        .filter(_verified())
-        .select("vec_id", "other_id", "other_new")
+        ),
+        ["cell_key"],
+        "vec_id",
+        _verified(),
     )
     return gate_verdicts(pairs, new_vec, new_vec, "vec_id")
 
@@ -497,7 +367,7 @@ def semdedup_lsh_gate(
         pks=pks,
     )
     verdicts, kept_vec = semdedup_lsh_epoch_keyed(
-        batch, stored, planes, n_tables, n_flips, new_vec=new_vec
+        new_vec, stored, planes, n_flips
     )
     # verdicts feeds both sinks (its own rows + the kept_vec filter):
     # without the checkpoint the commit job runs the collision join twice
@@ -537,77 +407,48 @@ def stream_semdedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(VERDICT_SCHEMA).parquet(out_dir)
 
 
+_E_CTE = """e AS MATERIALIZED (
+  SELECT vec_id,
+         embedding::DOUBLE[] AS v,
+         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+  FROM embeddings
+)"""
+
+
+def _cos_clears(a: str, b: str) -> str:
+    """SQL: the rounded cosine of ``e`` rows ``a`` and ``b`` clears the
+    threshold (DuckDB's list_dot_product sums sequentially, like the
+    JVM re-verify)."""
+    return (
+        f"round(list_dot_product({a}.v, {b}.v) / ({a}.nrm * {b}.nrm), 6)"
+        f" >= {COSINE_THRESHOLD}"
+    )
+
+
 def _stream_semdedup_oracle_sql() -> str:
     """Epoch-unrolled brute-force DuckDB twin: epoch k's qualifying
     others are kept vectors of earlier epochs plus smaller-id vectors
     of epoch k, at the same rounded-cosine threshold.
 
     The O(n²) pairwise cosine scan runs ONCE into a MATERIALIZED
-    qualifying-pair table that every epoch filters — not once per
-    epoch as before (VERDICT r11 #7: the 4x re-scan plus its join
-    state exhausted ~80 GB of checker disk at sf1.0; the LSH twin's
-    oracle, structured exactly this way, completed there). Qualifying
-    pairs are few (threshold-filtered), so the materialization is
-    small even at 10x — exactness unchanged."""
-    ne = N_STREAM_EPOCHS
-    blocks = [
-        """e AS MATERIALIZED (
-  SELECT vec_id,
-         embedding::DOUBLE[] AS v,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-  FROM embeddings
-)""",
-        f"""pairs AS MATERIALIZED (
+    qualifying-pair table that every epoch filters (a per-epoch
+    re-scan plus its join state exhausted ~80 GB of checker disk at
+    sf1.0). Qualifying pairs are few, so the materialization is
+    small."""
+    pairs = f"""pairs AS MATERIALIZED (
   SELECT a.vec_id AS a_id, b.vec_id AS b_id
-  FROM e a JOIN e b
-    ON round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6)
-         >= {COSINE_THRESHOLD}
+  FROM e a JOIN e b ON {_cos_clears("a", "b")}
   WHERE a.vec_id <> b.vec_id
-)""",
-    ]
-    for k in range(ne):
-        index_arm = (
-            f"OR (b_id % {ne} < {k} "
-            f"AND b_id IN (SELECT vec_id FROM kept{k - 1}))"
-            if k > 0
-            else ""
-        )
-        blocks.append(
-            f"""m{k} AS MATERIALIZED (
-  SELECT a_id AS vec_id,
-         min(CASE WHEN NOT (b_id % {ne} = {k}) THEN b_id END)
-           AS dup_of_index,
-         min(CASE WHEN (b_id % {ne} = {k}) THEN b_id END)
-           AS dup_of_batch
-  FROM pairs
-  WHERE a_id % {ne} = {k}
-    AND ((b_id % {ne} = {k} AND b_id < a_id)
-         {index_arm})
-  GROUP BY a_id
-),
-v{k} AS MATERIALIZED (
-  SELECT e.vec_id, m.dup_of_index, m.dup_of_batch,
-         (m.dup_of_index IS NULL AND m.dup_of_batch IS NULL) AS keep
-  FROM e LEFT JOIN m{k} m USING (vec_id)
-  WHERE e.vec_id % {ne} = {k}
-),
-kept{k} AS MATERIALIZED (
-  SELECT vec_id FROM v{k} WHERE keep{"" if k == 0 else f'''
-  UNION ALL
-  SELECT vec_id FROM kept{k - 1}'''}
 )"""
-        )
-    union = "\nUNION ALL\n".join(f"SELECT * FROM v{k}" for k in range(ne))
-    return "WITH " + ",\n".join(blocks) + "\n" + union
+    return gate_verdicts_sql(f"WITH {_E_CTE},\n{pairs}", "e", "vec_id")
 
 
 def _stream_semdedup_lsh_oracle_sql() -> str:
     """Epoch-unrolled DuckDB twin of the LSH-fronted gate: the md5
     hyperplane cell derivation of _knn_ann_oracle_sql (adaptive plane
     count from count(*), multi-probe flips) produces a directional
-    candidate-pair set; each epoch's qualifying others are the
-    candidate-collided subset of (kept earlier) ∪ (smaller same-epoch
-    ids), exactly verified at the rounded-cosine threshold."""
+    candidate-pair set; its exactly-verified subset is the qualifying
+    pairs of the unrolled survivor rule."""
     from angelone_clickhouse_spark.operators.embedding_fast import (
         ANN_TARGET_BUCKET,
         KNN_ANN_FLIPS,
@@ -615,18 +456,13 @@ def _stream_semdedup_lsh_oracle_sql() -> str:
     )
     from angelone_clickhouse_spark.operators.similarity import EMB_DIM
 
-    ne, nt, nf = N_STREAM_EPOCHS, KNN_ANN_TABLES, KNN_ANN_FLIPS
+    nt, nf = KNN_ANN_TABLES, KNN_ANN_FLIPS
     blocks = [
         f"""params AS (
   SELECT GREATEST(4, CAST(ceil(log2(count(*) /
     {ANN_TARGET_BUCKET!r})) AS INTEGER)) AS np FROM embeddings
 )""",
-        """e AS MATERIALIZED (
-  SELECT vec_id,
-         embedding::DOUBLE[] AS v,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-  FROM embeddings
-)""",
+        _E_CTE,
         f"""pl AS MATERIALIZED (
   SELECT p,
          list_transform(generate_series(0, {EMB_DIM} - 1),
@@ -659,47 +495,15 @@ def _stream_semdedup_lsh_oracle_sql() -> str:
   FROM probes p JOIN tb c ON c.t = p.t AND c.bucket = p.probe
   WHERE c.vec_id <> p.a_id
 )""",
+        f"""pairs AS MATERIALIZED (
+  SELECT cd.a_id, cd.b_id
+  FROM cand cd
+  JOIN e a ON a.vec_id = cd.a_id
+  JOIN e b ON b.vec_id = cd.b_id
+  WHERE {_cos_clears("a", "b")}
+)""",
     ]
-    for k in range(ne):
-        index_arm = (
-            f"OR (b.vec_id % {ne} < {k} "
-            f"AND b.vec_id IN (SELECT vec_id FROM kept{k - 1}))"
-            if k > 0
-            else ""
-        )
-        blocks.append(
-            f"""m{k} AS MATERIALIZED (
-  SELECT vec_id,
-         min(CASE WHEN NOT src_new THEN b_id END) AS dup_of_index,
-         min(CASE WHEN src_new THEN b_id END) AS dup_of_batch
-  FROM (
-    SELECT a.vec_id, b.vec_id AS b_id, (b.vec_id % {ne} = {k}) AS src_new
-    FROM e a
-    JOIN cand cd ON cd.a_id = a.vec_id
-    JOIN e b
-      ON b.vec_id = cd.b_id
-     AND round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6)
-           >= {COSINE_THRESHOLD}
-    WHERE a.vec_id % {ne} = {k}
-      AND ((b.vec_id % {ne} = {k} AND b.vec_id < a.vec_id)
-           {index_arm})
-  )
-  GROUP BY vec_id
-),
-v{k} AS MATERIALIZED (
-  SELECT e.vec_id, m.dup_of_index, m.dup_of_batch,
-         (m.dup_of_index IS NULL AND m.dup_of_batch IS NULL) AS keep
-  FROM e LEFT JOIN m{k} m USING (vec_id)
-  WHERE e.vec_id % {ne} = {k}
-),
-kept{k} AS MATERIALIZED (
-  SELECT vec_id FROM v{k} WHERE keep{"" if k == 0 else f'''
-  UNION ALL
-  SELECT vec_id FROM kept{k - 1}'''}
-)"""
-        )
-    union = "\nUNION ALL\n".join(f"SELECT * FROM v{k}" for k in range(ne))
-    return "WITH " + ",\n".join(blocks) + "\n" + union
+    return gate_verdicts_sql("WITH " + ",\n".join(blocks), "e", "vec_id")
 
 
 QUERIES = {

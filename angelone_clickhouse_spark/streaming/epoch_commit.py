@@ -67,7 +67,7 @@ from angelone_clickhouse_spark.streaming.keyed_index import (
     PART_COL,
     expire_epochs_keyed,
 )
-from angelone_clickhouse_spark.streaming.workdirs import owned_tmpdir
+from angelone_clickhouse_spark.streaming.workdirs import owned_tmpdir, replay_copy
 
 # registry-entry replay layout: a replayed table is split into this many
 # epoch files by <key> % N_STREAM_EPOCHS, replayed in epoch order
@@ -245,12 +245,6 @@ def run_epochs(
     await_or_raise(q, REPLAY_TIMEOUT_S, f"{table} replay")
 
 
-# one replay dir per (sf_dir, table, table version): building it is
-# harness setup, not operator work; every gate run replays it into
-# fresh sinks, and a table rewritten in place gets a new one
-_REPLAY_CACHE: dict[tuple, str] = {}
-
-
 def replay_gate(
     spark: SparkSession,
     sf_dir: str,
@@ -261,15 +255,12 @@ def replay_gate(
 ) -> list[str]:
     """Replay ``table`` in N_STREAM_EPOCHS epochs through a gate whose
     epoch function is ``epoch_fn``, into fresh sinks under a
-    ``<name>_run_*`` work dir. Returns the sink dirs."""
-    from angelone_clickhouse_spark.sources.tables import table_version
-
-    key = (sf_dir, table, table_version(sf_dir, table))
-    src = _REPLAY_CACHE.get(key)
-    if src is None:
-        src = os.path.join(owned_tmpdir(prefix=f"replay_{table}_"), "in")
-        write_replay(spark, sf_dir, table, src)
-        _REPLAY_CACHE[key] = src
+    ``<name>_run_*`` work dir. Returns the sink dirs. The split replay
+    copy is harness setup, not operator work: it is built once per
+    table version (workdirs.replay_copy)."""
+    src = replay_copy(
+        sf_dir, table, lambda d: write_replay(spark, sf_dir, table, d)
+    )
     work = owned_tmpdir(prefix=f"{name}_run_")
     dirs = [os.path.join(work, s) for s in sinks]
     writer = make_epoch_writer(epoch_fn, *dirs)

@@ -24,12 +24,14 @@ the index holds only SURVIVORS, a small fraction of the corpus, so
 at 100 TB this buys per-epoch I/O bounded by bucket occupancy for a
 constant-factor bump of the (already reduced) index footprint.
 
-Pruning is SEMANTICS-PRESERVING, which is why the pure epoch
-functions (docdedup.dedup_epoch, embdedup.semdedup_lsh_epoch) are
-unchanged: a survivor none of whose collision keys is probed this
-epoch can never produce a candidate pair (the candidate join equates
-exact keys), so feeding the epoch function the pruned subset yields
-bit-identical verdicts — the driver oracles prove it end-to-end.
+Pruning is SEMANTICS-PRESERVING: a survivor none of whose collision
+keys is probed this epoch can never produce a candidate pair (the
+candidate join equates exact keys), so an epoch over the pruned
+partitions yields the verdicts it would over the whole store — tests
+compare the two reads, and the driver oracles check the gates
+end-to-end. Both keyed gates run the same candidate join,
+:func:`keyed_pairs`; each supplies only its key columns, its inline
+payload and its verify predicate.
 
 Epochs append to the store through the one committer
 (epoch_commit.commit_epoch), as ``pk=<n>/e<id>-part-*`` files.
@@ -50,13 +52,12 @@ from angelone_clickhouse_spark.materialize import observed
 # by design) — the PRUNING win shows up when the batch is small
 # relative to the key space, which is the 100 TB shape (a trigger's
 # probe keys cover a vanishing fraction of n_tables x 2^planes
-# cells); tests measure it with small epochs. A deployment sizes P so
-# one partition's occupancy fits a scan task comfortably — P is
-# LAYOUT, not semantics (no oracle depends on it), so it is tuned to
-# the fixture here: 16 keeps per-epoch commit cost (one file per
-# touched partition + renames) proportionate at test SFs, and the
-# env knob lets a larger run raise it without a code change.
-P_KEYED = int(os.environ.get("SPARK_GRAFT_KEYED_PARTITIONS", "16"))
+# cells); tests measure it with small epochs. P is LAYOUT, not
+# semantics (no oracle depends on it): a deployment sizes it so one
+# partition's occupancy fits a scan task; 16 keeps per-epoch commit
+# cost (one file per touched partition + renames) proportionate at
+# test SFs.
+P_KEYED = 16
 PART_COL = "pk"
 
 
@@ -103,15 +104,51 @@ def read_keyed(
     return df.drop(PART_COL)
 
 
-def collect_pks(df_with_keys: DataFrame, pk_col: F.Column) -> list[int]:
-    """Driver-side candidate-partition set of a BOUNDED probe frame
-    (one trigger's keys): at most P_KEYED distinct values."""
-    return [
-        r[0]
-        for r in df_with_keys.select(pk_col.alias(PART_COL))
-        .distinct()
-        .collect()
-    ]
+def keyed_pairs(
+    probe: DataFrame,
+    index_rows: DataFrame,
+    batch_rows: DataFrame,
+    own: DataFrame,
+    keys: list[str],
+    key: str,
+    verify: F.Column,
+) -> DataFrame:
+    """The collision-candidate join of a keyed gate, verified: the
+    qualified ``(key, other_id, other_new)`` pairs that
+    ``dedup.gate_verdicts`` turns into verdicts.
+
+    * ``probe`` holds the batch's ``(key, *keys)`` collision keys and
+      is broadcast, so the pruned index scan never shuffles;
+    * ``index_rows`` (the pruned store) and ``batch_rows`` (the batch
+      in the store's layout) carry ``(*keys, other_id, *payload)``
+      with the payload inline: an index row sharing a key is a
+      candidate against any other id (``other_new`` false), a batch
+      row only against a larger id (``other_new`` true — the one-pass
+      within-batch rule);
+    * ``own`` carries each batch row's own payload, broadcast on
+      ``key``, and ``verify`` is the exact predicate over both.
+
+    Multi-key collisions yield duplicate pairs: each costs one extra
+    verify and collapses in the verdicts' min-aggregate, cheaper than
+    a dedup shuffle of payload-carrying rows."""
+    probe = F.broadcast(probe)
+
+    def arm(rows: DataFrame, other_new: bool, qualifies: F.Column):
+        return (
+            rows.join(probe, keys)
+            .filter(qualifies)
+            .drop(*keys)
+            .withColumn("other_new", F.lit(other_new))
+        )
+
+    other = F.col("other_id")
+    return (
+        arm(index_rows, False, other != F.col(key))
+        .unionByName(arm(batch_rows, True, other < F.col(key)))
+        .join(F.broadcast(own), key)
+        .filter(verify)
+        .select(key, "other_id", "other_new")
+    )
 
 
 def checkpoint_with_pks(
@@ -126,13 +163,11 @@ def checkpoint_with_pks(
     materialization as observed metrics — one boolean ``max`` per
     bucket, P_KEYED metrics total, so the driver-side payload is
     bounded by config at ANY batch size — replacing the separate
-    ``distinct().collect()`` job every keyed gate paid per epoch
-    (:func:`collect_pks` stays for non-checkpointing callers).
+    ``distinct().collect()`` job every keyed gate paid per epoch.
 
     Exactly one of ``pk_col`` (one bucket per row) / ``pk_arr``
     (array of buckets per row) is given. An empty frame yields an
-    empty pks list (metrics aggregate to NULL over zero rows),
-    matching collect_pks on an empty frame. Returns
+    empty pks list (metrics aggregate to NULL over zero rows). Returns
     ``(checkpointed_df, pks)``."""
     from pyspark.sql import Observation
 

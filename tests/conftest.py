@@ -23,3 +23,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def oracle_rows():
+    """``rows(sf_dir, sql)``: the row set of a DuckDB oracle over the
+    fixture tables of ``sf_dir``."""
+    import duckdb
+
+    from angelone_clickhouse_spark import TABLES
+
+    def rows(sf_dir: str, sql: str) -> set[tuple]:
+        con = duckdb.connect()
+        for t in TABLES:
+            con.sql(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{sf_dir}/{t}.parquet')"
+            )
+        return set(con.sql(sql).fetchall())
+
+    return rows

@@ -1,5 +1,5 @@
 """Streaming survivor-index document dedup (streaming/docdedup.py):
-stream == sequential-batch equivalence, retry idempotence, restart
+stream == epoch-unrolled batch oracle, retry idempotence, restart
 resume, and the short-doc edge."""
 
 from __future__ import annotations
@@ -10,10 +10,8 @@ import shutil
 from pyspark.sql import functions as F
 
 from angelone_clickhouse_spark.streaming.docdedup import (
-    N_STREAM_EPOCHS,
-    SIG_SCHEMA,
+    ORACLES,
     dedup_docs_gate,
-    dedup_epoch,
     read_sig_index,
 )
 from angelone_clickhouse_spark.streaming.epoch_commit import (
@@ -41,26 +39,16 @@ def _verdicts(spark, out_dir):
     ).parquet(out_dir)
 
 
-def _sequential_replica(spark, sf_dir):
-    """The stream's semantics as a driver-side loop over batch jobs:
-    epoch k's docs vs the accumulated kept-signature index."""
+def _oracle(oracle_rows, sf_dir):
+    """The stream's semantics as the DuckDB oracle: every epoch's
+    verdicts against the survivors of the epochs before it."""
+    return oracle_rows(sf_dir, ORACLES["stream_dedup_docs"])
+
+
+def test_stream_equals_sequential_batch(spark, sf_dir, tmp_path, oracle_rows):
+    from angelone_clickhouse_spark.operators.dedup import minhash_signatures
     from angelone_clickhouse_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    index = spark.createDataFrame([], SIG_SCHEMA)
-    out = set()
-    for k in range(N_STREAM_EPOCHS):
-        batch = docs.filter((F.col("doc_id") % N_STREAM_EPOCHS) == k)
-        verdicts, kept = dedup_epoch(batch, index)
-        verdicts = verdicts.localCheckpoint(eager=True)
-        out |= _rows(verdicts)
-        index = index.unionByName(
-            kept.localCheckpoint(eager=True)
-        ).localCheckpoint(eager=True)
-    return out, index
-
-
-def test_stream_equals_sequential_batch(spark, sf_dir, tmp_path):
     docs_dir = str(tmp_path / "in")
     write_replay(spark, sf_dir, "documents", docs_dir)
     out_dir, index_dir = str(tmp_path / "v"), str(tmp_path / "idx")
@@ -68,13 +56,17 @@ def test_stream_equals_sequential_batch(spark, sf_dir, tmp_path):
         spark, docs_dir, out_dir, index_dir, str(tmp_path / "ckpt")
     )
     got = _rows(_verdicts(spark, out_dir))
-    want, want_index = _sequential_replica(spark, sf_dir)
+    want = _oracle(oracle_rows, sf_dir)
     assert got == want
     # the persisted index is exactly the kept docs' signatures
+    kept = [w[0] for w in want if w[3]]
+    want_index = minhash_signatures(load_table(spark, sf_dir, "documents"))
     stream_index = {
         tuple(r) for r in read_sig_index(spark, index_dir).collect()
     }
-    assert stream_index == {tuple(r) for r in want_index.collect()}
+    assert stream_index == {
+        tuple(r) for r in want_index.filter(F.col("doc_id").isin(kept)).collect()
+    }
     # every doc got exactly one verdict
     n_docs = spark.read.parquet(docs_dir).count()
     assert len(got) == n_docs
@@ -109,7 +101,7 @@ def test_epoch_retry_is_idempotent(spark, sf_dir, tmp_path):
     ).count() + batch_of(files[1]).count()
 
 
-def test_restart_resumes_from_checkpoint(spark, sf_dir, tmp_path):
+def test_restart_resumes_from_checkpoint(spark, sf_dir, tmp_path, oracle_rows):
     """Stop after the first two epochs (only their files exist), then
     add the rest and re-run with the same checkpoint: the final state
     must equal a single uninterrupted run."""
@@ -129,9 +121,7 @@ def test_restart_resumes_from_checkpoint(spark, sf_dir, tmp_path):
     for name in files[2:]:
         shutil.copy2(os.path.join(full_dir, name), os.path.join(docs_dir, name))
     dedup_docs_stream(spark, docs_dir, out_dir, index_dir, ckpt)
-    got = _rows(_verdicts(spark, out_dir))
-    want, _ = _sequential_replica(spark, sf_dir)
-    assert got == want
+    assert _rows(_verdicts(spark, out_dir)) == _oracle(oracle_rows, sf_dir)
 
 
 def test_short_docs_kept_but_not_indexed(spark, tmp_path):
@@ -141,8 +131,7 @@ def test_short_docs_kept_but_not_indexed(spark, tmp_path):
         [(1, "one two", "en", "t", 7), (2, "one two", "en", "t", 7)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    index = spark.createDataFrame([], SIG_SCHEMA)
-    verdicts, kept = dedup_epoch(batch, index)
+    verdicts, kept = dedup_docs_gate(batch, str(tmp_path / "idx"))
     got = _rows(verdicts)
     assert got == {(1, None, None, True), (2, None, None, True)}
     assert kept.count() == 0

@@ -23,7 +23,7 @@ from angelone_clickhouse_spark.streaming.epoch_commit import (
 )
 from angelone_clickhouse_spark.streaming.keyed_index import (
     P_KEYED,
-    collect_pks,
+    checkpoint_with_pks,
     keyed_bytes,
     pk_of,
     pk_of_band,
@@ -49,49 +49,52 @@ def lsh_store(spark, sf_dir, tmp_path):
     return index_dir, tiny
 
 
-def _lsh_probe_pks(tiny):
+def _lsh_probe(tiny):
+    """The tiny batch's celled vectors and the partitions its probe
+    keys hash into, derived as the gate derives them."""
     from angelone_clickhouse_spark.streaming.embdedup import (
         _as_double_vecs,
         _probe_keys,
         _with_cells,
     )
 
-    new_keys = _with_cells(
-        _as_double_vecs(tiny), _LSH["planes"], _LSH["n_tables"]
-    )
-    return collect_pks(
-        new_keys.select(
-            F.explode(
-                _probe_keys(_LSH["planes"], _LSH["n_flips"])
-            ).alias("cell_key")
+    return checkpoint_with_pks(
+        _with_cells(_as_double_vecs(tiny), _LSH["planes"], _LSH["n_tables"]),
+        pk_arr=F.transform(
+            _probe_keys(_LSH["planes"], _LSH["n_flips"]), lambda k: pk_of(k)
         ),
-        pk_of("cell_key"),
     )
 
 
-def test_lsh_pruned_epoch_equals_full_index_epoch(spark, lsh_store):
-    """Pruning soundness, tested directly: the keyed epoch over the
-    PRUNED partitions yields bit-identical verdicts to the pure epoch
-    function over the FULL index — a survivor sharing no probed cell
-    can never collide."""
+def _lsh_epoch(spark, index_dir, tiny, full_store):
+    """The keyed epoch of the tiny batch over its probe partitions
+    (or, with ``full_store``, over every partition), and those
+    partitions."""
     from angelone_clickhouse_spark.streaming.embdedup import (
-        read_lsh_index,
-        semdedup_lsh_epoch,
         semdedup_lsh_epoch_keyed,
     )
 
-    index_dir, tiny = lsh_store
-    pks = _lsh_probe_pks(tiny)
+    new_vec, pks = _lsh_probe(tiny)
     stored = read_keyed(
         spark,
         index_dir,
         "cell_key long, vec_id long, v array<double>",
-        pks=pks,
+        pks=None if full_store else pks,
     )
-    got, _ = semdedup_lsh_epoch_keyed(tiny, stored, **_LSH)
-    want, _ = semdedup_lsh_epoch(
-        tiny, read_lsh_index(spark, index_dir), **_LSH
+    verdicts, _ = semdedup_lsh_epoch_keyed(
+        new_vec, stored, _LSH["planes"], _LSH["n_flips"]
     )
+    return verdicts, pks
+
+
+def test_lsh_pruned_epoch_equals_full_index_epoch(spark, lsh_store):
+    """Pruning soundness, tested directly: the keyed epoch over the
+    PRUNED partitions yields bit-identical verdicts to the keyed epoch
+    over the FULL store — a survivor sharing no probed cell can never
+    collide."""
+    index_dir, tiny = lsh_store
+    got, _ = _lsh_epoch(spark, index_dir, tiny, False)
+    want, _ = _lsh_epoch(spark, index_dir, tiny, True)
     assert {tuple(r) for r in got.collect()} == {
         tuple(r) for r in want.collect()
     }
@@ -106,22 +109,11 @@ def test_lsh_epoch_scan_is_partition_pruned_and_broadcast_joined(
     substring order), the scan's nearest join ancestor is a
     BroadcastHashJoin with NO Exchange and NO SortMergeJoin between —
     the index side never shuffles, even with auto-broadcast off."""
-    from angelone_clickhouse_spark.streaming.embdedup import (
-        semdedup_lsh_epoch_keyed,
-    )
-
     index_dir, tiny = lsh_store
-    pks = _lsh_probe_pks(tiny)
-    stored = read_keyed(
-        spark,
-        index_dir,
-        "cell_key long, vec_id long, v array<double>",
-        pks=pks,
-    )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        verdicts, _ = semdedup_lsh_epoch_keyed(tiny, stored, **_LSH)
+        verdicts, _ = _lsh_epoch(spark, index_dir, tiny, False)
         plan = verdicts._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
@@ -161,7 +153,7 @@ def test_lsh_epoch_read_bound_is_pruned_bytes(spark, lsh_store):
     bound is the contract, and it tightens as key space grows with
     the corpus while a trigger's probe set stays fixed.)"""
     index_dir, tiny = lsh_store
-    pks = _lsh_probe_pks(tiny)
+    _, pks = _lsh_probe(tiny)
     assert 0 < len(pks) < P_KEYED
     pruned, total = keyed_bytes(index_dir, pks), keyed_bytes(index_dir)
     assert 0 < pruned < total, (pruned, total, len(pks))
@@ -182,49 +174,46 @@ def sig_store(spark, sf_dir, tmp_path):
     return index_dir, tiny
 
 
-def test_doc_pruned_epoch_equals_full_index_epoch(spark, sig_store):
+def _doc_epoch(spark, index_dir, tiny, full_store):
+    """The keyed epoch of the tiny batch over its band-key partitions
+    (or, with ``full_store``, over every partition), and those
+    partitions."""
     from angelone_clickhouse_spark.operators.dedup import (
         _band_keys,
         minhash_signatures,
     )
     from angelone_clickhouse_spark.streaming.docdedup import (
         KEYED_SIG_SCHEMA,
-        dedup_epoch,
         dedup_epoch_keyed,
-        read_sig_index,
     )
 
-    index_dir, tiny = sig_store
     sig = minhash_signatures(tiny).localCheckpoint(eager=True)
-    pks = collect_pks(_band_keys(sig), pk_of_band())
-    stored = read_keyed(spark, index_dir, KEYED_SIG_SCHEMA, pks=pks)
-    got, _ = dedup_epoch_keyed(tiny, sig, stored)
-    want, _ = dedup_epoch(tiny, read_sig_index(spark, index_dir))
+    bn, pks = checkpoint_with_pks(_band_keys(sig), pk_col=pk_of_band())
+    stored = read_keyed(
+        spark, index_dir, KEYED_SIG_SCHEMA, pks=None if full_store else pks
+    )
+    verdicts, _ = dedup_epoch_keyed(tiny, sig, bn, stored)
+    return verdicts, pks
+
+
+def test_doc_pruned_epoch_equals_full_index_epoch(spark, sig_store):
+    index_dir, tiny = sig_store
+    got, _ = _doc_epoch(spark, index_dir, tiny, False)
+    want, _ = _doc_epoch(spark, index_dir, tiny, True)
     assert {tuple(r) for r in got.collect()} == {
         tuple(r) for r in want.collect()
     }
 
 
 def test_doc_epoch_scan_is_partition_pruned(spark, sig_store):
-    from angelone_clickhouse_spark.operators.dedup import (
-        _band_keys,
-        minhash_signatures,
-    )
     from angelone_clickhouse_spark.plantree import nodes_with_ancestors
-    from angelone_clickhouse_spark.streaming.docdedup import (
-        KEYED_SIG_SCHEMA,
-        dedup_epoch_keyed,
-    )
 
     index_dir, tiny = sig_store
-    sig = minhash_signatures(tiny).localCheckpoint(eager=True)
-    pks = collect_pks(_band_keys(sig), pk_of_band())
-    assert 0 < len(pks) < P_KEYED
-    stored = read_keyed(spark, index_dir, KEYED_SIG_SCHEMA, pks=pks)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        verdicts, _ = dedup_epoch_keyed(tiny, sig, stored)
+        verdicts, pks = _doc_epoch(spark, index_dir, tiny, False)
+        assert 0 < len(pks) < P_KEYED
         plan = verdicts._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

@@ -43,3 +43,31 @@ def test_rewritten_tables_are_not_served_from_cache(spark, tmp_path):
     _rewrite(f"{sf}/embeddings.parquet", _reverse_embeddings)
     # the oracle reads the rewritten files; so must every query
     assert cp.run_parity(spark, sf, only=CACHED, quiet=True) == []
+
+
+def test_superseded_replay_copy_is_removed(spark, tmp_path, oracle_rows):
+    """A gate's replay copy lives as long as its table version: each
+    call after a rewrite replays the current file, and the copy of the
+    version it superseded is gone."""
+    import glob
+    import os
+    import tempfile
+
+    from angelone_clickhouse_spark.streaming.novelty import (
+        ORACLES,
+        stream_novelty_docs,
+    )
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf)
+    copies = os.path.join(tempfile.gettempdir(), "replay_documents_*")
+    before = set(glob.glob(copies))
+    for keep in (1.0, 2 / 3, 1 / 3):
+        if keep < 1.0:
+            _rewrite(
+                f"{sf}/documents.parquet",
+                lambda t: t.slice(0, int(t.num_rows * keep)),
+            )
+        got = {tuple(r) for r in stream_novelty_docs(spark, sf).collect()}
+        assert got == oracle_rows(sf, ORACLES["stream_novelty_docs"])
+    assert len(set(glob.glob(copies)) - before) == 1

@@ -7,7 +7,8 @@ tasks and the whole-stage codegen classes it compiled — at fixture
 scale most registry entries are overhead-bound, so job/stage/task
 counts are the direct measure of the fixed cost a query pays (and
 the count of driver round-trips is scale-relevant: each one is a
-synchronization barrier at any data size).
+synchronization barrier at any data size). Every named query runs
+once untimed before the timed runs, so the runs measure a warm JVM.
 
 Usage: python tools/profile_query.py <query> [query ...] [--runs N]
        python tools/profile_query.py --top 15   (slowest by bench_full.json)
@@ -56,8 +57,13 @@ def main() -> None:
     tracker = sc.statusTracker()
     reg = entrymod.queries()
 
-    # warm-up
+    # warm-up: one untimed pass over every named query, so the first
+    # query does not pay JVM warm-up (class loading, codegen) inside
+    # its timed runs and per-query numbers do not depend on the order
+    # the queries are named in
     spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()
+    for name in names:
+        reg[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
     out = {}
     for name in names:
